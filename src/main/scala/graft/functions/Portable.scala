@@ -49,13 +49,6 @@ object Portable {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** 60-bit portable hash (fingerprinting; no arithmetic on top). */
-  def hash60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
-  def hash60Sql(expr: String): String =
-    s"(('0x' || substring(md5($expr), 1, 15))::BIGINT)"
-
   /** Universal-hash permutation family for MinHash: h_j(x) = (a_j*x + b_j) mod p.
     * p = 2^31 - 1 (Mersenne prime); a odd, < 2^31. Fixed constants so Spark
     * and the SQL oracle agree. */

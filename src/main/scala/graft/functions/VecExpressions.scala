@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for embedding math (SURVEY.md §7.3's
@@ -234,12 +233,5 @@ object VecFunctions {
         es => graft.plans.AsofLE(es.head, es(1)), "built-in")
       spark.conf.set(registeredFlag, "true")
     }
-  }
-
-  def vecDot(spark: SparkSession, a: String, b: String): Column = {
-    register(spark); expr(s"vec_dot($a, $b)")
-  }
-  def vecNorm(spark: SparkSession, a: String): Column = {
-    register(spark); expr(s"vec_norm($a)")
   }
 }

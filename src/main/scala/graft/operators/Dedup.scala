@@ -260,12 +260,6 @@ object Dedup {
   private[graft] def gramCandidateCount(s: SparkSession, d: String): Long =
     jaccardCandidates(jaccardDocArrays(retainedGrams(gramSetDF(s, d)))).count()
 
-  /** Stage-bisection seams for `tools.GramDebug`. */
-  private[graft] def gramSetCount(s: SparkSession, d: String): Long =
-    gramSetDF(s, d).count()
-  private[graft] def retainedGramCount(s: SparkSession, d: String): Long =
-    retainedGrams(gramSetDF(s, d)).count()
-
   /** Candidate-pair count of the MinHash LSH banding (distinct doc pairs
     * colliding on ≥1 band signature) — [[lshPairs]]'s pairwise work before
     * the est-Jaccard threshold, counted off the SAME [[lshScored]] stage

@@ -1975,9 +1975,6 @@ object Similarity {
         round(col("enc.recon_err"), 4).as("recon_err"): _*)
       .orderBy("vec_id")
 
-  private def pqCentroidSqlList(s: Int, j: Int): String =
-    (0 until PqDims).map(i => s"${pqCentroid(s, j, i)}").mkString("[", ", ", "]")
-
   private def pqDistSql(v: String, s: Int, j: Int): String =
     (0 until PqDims).map { i =>
       // explicit self-multiply, not power(x, 2): guarantees the identical

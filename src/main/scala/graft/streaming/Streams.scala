@@ -4,8 +4,8 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
-  TTLConfig, ValueState}
+  GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode,
+  TimerValues, TTLConfig}
 import java.sql.Timestamp
 
 /** Structured Streaming rebuild of the reference's two pipelines
@@ -15,6 +15,16 @@ import java.sql.Timestamp
   * DataFrame` functions (the reference's `PTransform` idiom, O12) and run
   * identically on a batch frame or a `readStream` frame — Beam's unified
   * model, natively.
+  *
+  * Micro-batch sinks: every `foreachBatch` streaming twin starts through
+  * one seam, `eachBatch`, and lands each micro-batch's output under
+  * `<dir>/batch_id=<id>` through `writeBatchDir`, which byte-replaces that
+  * directory. A batch the engine re-runs after a failure carries the same
+  * id, so it replaces its own earlier output instead of appending
+  * duplicates: replayable sources plus these idempotent sinks give
+  * end-to-end exactly-once output (the reference's retry-surviving append,
+  * `Demo1.java:96-97`). Sinks that also READ their own earlier output
+  * (the grow variants) exclude their own batch id on the read side.
   */
 object Streams {
 
@@ -148,82 +158,6 @@ object Streams {
             }
           }
       }
-  }
-
-  /** The same Beam trigger/pane semantics as [[latePanes]], rebuilt on
-    * Spark 4's `transformWithState` (the arbitrary-stateful-processing v2
-    * API): typed `ValueState` via a handle instead of the single implicit
-    * state slot, and first-class multi-timer registration instead of one
-    * timeout per key — the ON_TIME firing timer and the GC timer are two
-    * independent timers here, where the flatMapGroupsWithState version has
-    * to re-arm its single timeout. Requires the RocksDB state-store
-    * provider (the API rejects the default HDFS-backed store), which is
-    * also the provider a 100 TB deployment runs: state lives off-heap and
-    * spills, sized by the lateness horizon, not executor heap.
-    */
-  class LatePaneProcessor extends StatefulProcessor[(Int, Long), Msg, Pane] {
-    @transient private var state: ValueState[PaneState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[PaneState](
-        "pane", Encoders.product[PaneState], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Int, Long), rows: Iterator[Msg],
-        tv: TimerValues): Iterator[Pane] = {
-      val (uid, wstart) = key
-      val windowEnd = wstart + WindowMs
-      val fireAt = windowEnd - HorizonMs // Beam wm = spark wm + horizon
-      val n = rows.size.toLong
-      val st = if (state.exists()) Option(state.get()) else None
-      if (st.exists(_.fired)) {
-        // after the on-time pane: immediate late firing, delta only (O9)
-        Iterator.single(Pane(new Timestamp(wstart), uid, n, "LATE"))
-      } else if (tv.getCurrentWatermarkInMs() >= fireAt) {
-        // first data arrived after the Beam watermark passed the window end
-        state.update(PaneState(0L, fired = true))
-        getHandle.registerTimer(windowEnd) // GC when no row can survive
-        Iterator.single(Pane(new Timestamp(wstart), uid, n, "LATE"))
-      } else {
-        // before the on-time firing: buffer and arm the firing timer
-        state.update(PaneState(st.map(_.buffered).getOrElse(0L) + n, fired = false))
-        getHandle.registerTimer(fireAt)
-        Iterator.empty
-      }
-    }
-
-    override def handleExpiredTimer(key: (Int, Long), tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[Pane] = {
-      val (uid, wstart) = key
-      val windowEnd = wstart + WindowMs
-      if (!state.exists()) return Iterator.empty
-      val st = state.get()
-      if (!st.fired) {
-        // Beam watermark passed the window end: main on-time firing
-        val out = Iterator.single(
-          Pane(new Timestamp(wstart), uid, st.buffered, "ON_TIME"))
-        if (tv.getCurrentWatermarkInMs() < windowEnd) {
-          state.update(PaneState(0L, fired = true))
-          getHandle.registerTimer(windowEnd)
-        } else state.clear()
-        out
-      } else {
-        state.clear() // lateness horizon passed: GC
-        Iterator.empty
-      }
-    }
-  }
-
-  /** [[latePanes]] on the transformWithState API — identical pane output,
-    * tested side by side in `StreamingSpec`.
-    */
-  def latePanesTws(parsed: Dataset[Msg]): Dataset[Pane] = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    parsed
-      .withWatermark("event_time", "2 minutes")
-      .groupByKey(m => (m.user_id, m.event_time.getTime / WindowMs * WindowMs))
-      .transformWithState(new LatePaneProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** One emitted top-k snapshot row. */
@@ -608,17 +542,12 @@ object Streams {
   def streamMixtureDrift(df: DataFrame, timeCol: String, delay: String,
       windowDur: String, baseline: DataFrame, checkpoint: String,
       sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.withWatermark(timeCol, delay)
+      : StreamingQuery =
+    eachBatch(df.withWatermark(timeCol, delay)
       .groupBy(window(col(timeCol), windowDur), col("source"))
       .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("source"), col("n"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        sink(mixtureDriftReport(batch.toDF(), baseline), id)
-      }
-      .start()
+      .select(col("window.start").as("window_start"), col("source"), col("n")),
+      checkpoint) { (batch, id) => sink(mixtureDriftReport(batch, baseline), id) }
 
   /** Streaming exact dedup (the training-pipeline counterpart of
     * `Dedup.dedupExact`): state keyed by the id columns, bounded by the
@@ -654,13 +583,44 @@ object Streams {
     * idempotent (batch-id keyed) writes. Returns the started query.
     */
   def appendToParquet(df: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : StreamingQuery =
     df.writeStream
       .outputMode("append")
       .format("parquet")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
       .start()
+
+  // ------------------------------------------------- micro-batch sink seam
+  /** Start `df` running `sink` on every micro-batch with its batch id: the
+    * one `foreachBatch` wiring the streaming twins share. */
+  private def eachBatch(df: DataFrame, checkpoint: String)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, id: Long) => sink(batch, id) }
+      .start()
+
+  /** Byte-replace `dir/batch_id=<id>` with `df`, optionally nested
+    * `partitionBy` directories inside it. Readers get `batch_id` back via
+    * partition-directory inference, so `df` must not carry its own
+    * `batch_id` column (Spark's data-schema-wins overlap rule would shadow
+    * the inferred one). Inference types small ids as INTEGER: readers that
+    * want a Long must cast, never rely on boxed numeric equality.
+    */
+  private def writeBatchDir(df: DataFrame, dir: String, id: Long,
+      partitionBy: String*): Unit = {
+    val w = df.write.mode("overwrite")
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
+      .parquet(s"$dir/batch_id=$id")
+  }
+
+  /** Run `f` on `df` persisted, for sinks that write one frame two ways:
+    * the batch is computed once, not once per write. */
+  private def withPersisted(df: DataFrame)(f: DataFrame => Unit): Unit = {
+    val p = df.persist()
+    try f(p) finally { p.unpersist(); () }
+  }
 
   /** Message-bus envelope normalization (O1, SURVEY §1.3 "SequencedMessage
     * envelope"): a Kafka-source-shaped frame — binary `key`/`value`, broker
@@ -710,10 +670,7 @@ object Streams {
   /** One micro-batch of the dead-letter sink contract, factored out so the
     * redelivery path is directly testable: rows passing `valid` land under
     * `sinkPath/batch_id=<id>`, the rest — annotated with the failure
-    * `reason` and the batch id — under `quarantinePath/batch_id=<id>`.
-    * Batch-id-keyed directories + overwrite make redelivered batches
-    * idempotent: a retried batch replaces its own output instead of
-    * appending duplicates.
+    * `reason` — under `quarantinePath/batch_id=<id>`.
     */
   def deadLetterBatch(batch: DataFrame, id: Long,
       valid: org.apache.spark.sql.Column,
@@ -723,15 +680,12 @@ object Streams {
     // field) must quarantine the row, not drop it from both sides — losing
     // rows is the one failure mode a dead-letter sink exists to prevent
     val isValid = coalesce(valid, lit(false))
-    val b = batch.persist()
-    try {
-      b.filter(isValid).write.mode("overwrite")
-        .parquet(s"$sinkPath/batch_id=$id")
-      b.filter(!isValid)
-        .withColumn("dlq_reason", coalesce(reason, lit("validity_null")))
-        .write.mode("overwrite")
-        .parquet(s"$quarantinePath/batch_id=$id")
-    } finally { b.unpersist(); () }
+    withPersisted(batch) { b =>
+      writeBatchDir(b.filter(isValid), sinkPath, id)
+      writeBatchDir(b.filter(!isValid)
+        .withColumn("dlq_reason", coalesce(reason, lit("validity_null"))),
+        quarantinePath, id)
+    }
   }
 
   /** Dead-letter sink (O11 parity with `Demo1.java:96-97`: the reference
@@ -740,37 +694,16 @@ object Streams {
     * micro-batch retry's job (the checkpoint re-runs a failed batch), so
     * the dead-letter path carries rows that deterministically fail
     * validation — each batch splits on `valid` and quarantines the rest
-    * with a reason, idempotently per batch id via [[deadLetterBatch]].
+    * with a reason via [[deadLetterBatch]].
     */
   def appendWithDeadLetter(df: DataFrame,
       valid: org.apache.spark.sql.Column,
       reason: org.apache.spark.sql.Column,
       sinkPath: String, quarantinePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        deadLetterBatch(batch.toDF(), id, valid, reason, sinkPath, quarantinePath)
-      }
-      .start()
+      : StreamingQuery =
+    eachBatch(df, checkpoint)(
+      deadLetterBatch(_, _, valid, reason, sinkPath, quarantinePath))
 
-  /** One micro-batch of streaming ingestion dedup against a PERSISTED
-    * fingerprint index — the streaming twin of
-    * `Dedup.dedupIncrementalFromIndex` (read artifacts, never re-derive
-    * history): rows whose `fp` already exists in the index are dropped,
-    * survivors land under `outDir/batch_id=<id>` and their fingerprints
-    * append to the index as (fp, batch_id).
-    *
-    * Redelivery safety (the pitfall this factoring exists to test): a
-    * naive fp-only index would make a REDELIVERED batch dedupe against
-    * its own previous append and emit an empty batch. Tagging index rows
-    * with the writing batch id and anti-joining against `batch_id <> id`
-    * makes redelivery reproduce the original survivors exactly, and the
-    * duplicate (fp, id) index rows it re-appends are harmless — index
-    * membership is a set query. State is the index parquet itself:
-    * corpus-lifetime fingerprints at 16 bytes a row, queried by one
-    * anti-join per batch — no executor state, no watermark bound needed.
-    */
   /** Hadoop-FS handle for a state directory — NOT `java.io.File`, which
     * silently reports "absent" for any non-local URI (hdfs://, s3a://):
     * for stateful sinks that failure mode is silent data loss (an index
@@ -783,42 +716,52 @@ object Streams {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** One micro-batch of streaming ingestion dedup against a PERSISTED
+    * fingerprint index — the streaming twin of
+    * `Dedup.dedupIncrementalFromIndex` (read artifacts, never re-derive
+    * history): rows whose `fp` already exists in the index are dropped,
+    * survivors land under `outDir/batch_id=<id>` and their fingerprints
+    * append to the index as (fp, run_id, batch_id).
+    *
+    * Redelivery safety (the pitfall this factoring exists to test): a
+    * naive fp-only index would make a REDELIVERED batch dedupe against
+    * its own previous append and emit an empty batch. Tagging index rows
+    * with the writing batch id and anti-joining against `batch_id <> id`
+    * makes redelivery reproduce the original survivors exactly, and the
+    * duplicate (fp, id) index rows it re-appends are harmless — index
+    * membership is a set query. State is the index parquet itself:
+    * corpus-lifetime fingerprints at 16 bytes a row, queried by one
+    * anti-join per batch — no executor state, no watermark bound needed.
+    */
   def dedupIndexedBatch(batch: DataFrame, id: Long, runId: String,
       fp: org.apache.spark.sql.Column, tieBreak: org.apache.spark.sql.Column,
       indexDir: String, outDir: String): Unit = {
     val spark = batch.sparkSession
     val withFp = batch.withColumn("fp", fp)
-    val survivors = {
-      val (fs, idxPath) = stateFs(spark, indexDir)
-      val hasIndex = fs.exists(idxPath) &&
-        fs.listStatus(idxPath).exists(_.getPath.getName.endsWith(".parquet"))
-      // the redelivery exemption must key on (run, batch), not batch id
-      // alone: after a checkpoint reset batch ids restart at 0, and a
-      // batch-id-only exemption would let the NEW batch 0 skip dedup
-      // against the OLD run's batch-0 rows
-      val seenElsewhere =
-        if (!hasIndex) null
-        else spark.read.parquet(indexDir)
-          .filter(!(col("run_id") === runId && col("batch_id") === id))
-          .select("fp")
-      val fresh =
-        if (seenElsewhere == null) withFp
-        else withFp.join(seenElsewhere, Seq("fp"), "left_anti")
-      // intra-batch duplicates: a DETERMINISTIC winner per fingerprint
-      // (dropDuplicates is a First aggregate whose winner depends on task
-      // order — redelivery could then persist a different row than the
-      // original delivery, breaking the reproducibility contract)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("fp").orderBy(tieBreak)
-      fresh.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1).drop("_rn")
-    }.persist()
-    try {
-      survivors.drop("fp").write.mode("overwrite")
-        .parquet(s"$outDir/batch_id=$id")
+    val (fs, idxPath) = stateFs(spark, indexDir)
+    val hasIndex = fs.exists(idxPath) &&
+      fs.listStatus(idxPath).exists(_.getPath.getName.endsWith(".parquet"))
+    // the redelivery exemption must key on (run, batch), not batch id
+    // alone: after a checkpoint reset batch ids restart at 0, and a
+    // batch-id-only exemption would let the NEW batch 0 skip dedup
+    // against the OLD run's batch-0 rows
+    val fresh =
+      if (!hasIndex) withFp
+      else withFp.join(spark.read.parquet(indexDir)
+        .filter(!(col("run_id") === runId && col("batch_id") === id))
+        .select("fp"), Seq("fp"), "left_anti")
+    // intra-batch duplicates: a DETERMINISTIC winner per fingerprint
+    // (dropDuplicates is a First aggregate whose winner depends on task
+    // order — redelivery could then persist a different row than the
+    // original delivery, breaking the reproducibility contract)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("fp").orderBy(tieBreak)
+    withPersisted(fresh.withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1).drop("_rn")) { survivors =>
+      writeBatchDir(survivors.drop("fp"), outDir, id)
       survivors.select(col("fp"), lit(runId).as("run_id"), lit(id).as("batch_id"))
         .write.mode("append").parquet(indexDir)
-    } finally { survivors.unpersist(); () }
+    }
   }
 
   /** Streaming ingestion dedup: every micro-batch drops rows whose
@@ -831,14 +774,10 @@ object Streams {
   def streamDedupIndexed(df: DataFrame, fp: org.apache.spark.sql.Column,
       tieBreak: org.apache.spark.sql.Column,
       indexDir: String, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val runId = java.util.UUID.randomUUID().toString
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        dedupIndexedBatch(batch.toDF(), id, runId, fp, tieBreak, indexDir, outDir)
-      }
-      .start()
+    eachBatch(df, checkpoint)(
+      dedupIndexedBatch(_, _, runId, fp, tieBreak, indexDir, outDir))
   }
 
   // ---------------------------------------------------- streaming CDC upsert
@@ -919,33 +858,19 @@ object Streams {
     * versioned parquet snapshot via [[upsertBatch]]. */
   def streamUpsert(df: DataFrame, dir: String, key: String, checkpoint: String,
       seqCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        upsertBatch(batch.toDF(), id, dir, key, seqCol)
-      }
-      .start()
+      : StreamingQuery =
+    eachBatch(df, checkpoint)(upsertBatch(_, _, dir, key, seqCol))
 
   // ------------------------------------------------ streaming ANN enrichment
-  /** One micro-batch of the streaming ANN enrichment leg — the online twin
-    * of the batch `pq_adc_rerank_topk` query: the batch's
-    * `(qid, qemb: array<float>)` rows probe the STATIC PQ serving corpus
-    * (8-byte codes for the ADC recall pass; full-precision embeddings only
-    * for the pool-bounded rerank fetch) through literally the same
-    * `Similarity.adcRerank` composition the batch query plans, and the
-    * enriched top-k rows land under `outDir/batch_id=<id>`. Enrichment is
-    * per-record — no cross-batch state — so replay parity with the batch
-    * query is exact (StreamingSpec pins it) and a redelivered batch
-    * byte-replaces its own directory instead of appending duplicates
-    * (the [[upsertBatch]] idempotence discipline).
-    */
-  def annEnrichBatch(batch: DataFrame, id: Long, codes: DataFrame,
-      corpusEmb: DataFrame, outDir: String, poolN: Int = 10, k: Int = 3): Unit =
-    graft.operators.Similarity.adcRerank(batch, codes, corpusEmb, poolN, k)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
-  /** Streaming ANN enrichment over micro-batches of query embeddings.
+  /** Streaming ANN enrichment over micro-batches of `(qid, qemb:
+    * array<float>)` query embeddings — the online twin of the batch
+    * `pq_adc_rerank_topk` query: each batch probes the STATIC PQ serving
+    * corpus (8-byte codes for the ADC recall pass; full-precision
+    * embeddings only for the pool-bounded rerank fetch) through literally
+    * the same `Similarity.adcRerank` composition the batch query plans.
+    * Enrichment is per-record — no cross-batch state — so replay parity
+    * with the batch query is exact (StreamingSpec pins it).
+    *
     * The static corpus pair (codes + embeddings) is persisted once here —
     * every micro-batch probes it, and without the persist each batch
     * would re-run the corpus `pq_encode` scan. The cached relations live
@@ -956,15 +881,13 @@ object Streams {
     */
   def streamAnnEnrich(df: DataFrame, spark: SparkSession, sfDir: String,
       outDir: String, checkpoint: String, poolN: Int = 10, k: Int = 3)
-      : (org.apache.spark.sql.streaming.StreamingQuery, Seq[DataFrame]) = {
+      : (StreamingQuery, Seq[DataFrame]) = {
     val (codes, emb) = graft.operators.Similarity.pqServingCorpus(spark, sfDir)
     val cached = Seq(codes.persist(), emb.persist())
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        annEnrichBatch(batch.toDF(), id, cached.head, cached(1), outDir, poolN, k)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.Similarity
+        .adcRerank(batch, cached.head, cached(1), poolN, k), outDir, id)
+    }
     (q, cached)
   }
 
@@ -981,64 +904,46 @@ object Streams {
     * cluster memory (StreamingSpec asserts both: the broadcast exec in the
     * physical plan and zero probe-side exchanges). Enrichment is
     * per-record (no cross-batch state), so replay parity with the batch
-    * query is exact (StreamingSpec pins it) and a redelivered batch
-    * byte-replaces its own `batch_id=<id>` directory instead of appending
-    * duplicates (the [[upsertBatch]] idempotence discipline).
+    * query is exact (StreamingSpec pins it).
     */
   def asofEnrichPlan(batch: DataFrame, dim: DataFrame): DataFrame =
     batch
       .join(broadcast(dim), expr("user_id = s_uid AND asof_le(es, s_es)"), "left")
       .select(col("event_id"), col("user_id"), col("s_es").as("last_signup_s"))
 
-  def asofEnrichBatch(batch: DataFrame, id: Long, dim: DataFrame,
-      outDir: String): Unit =
-    asofEnrichPlan(batch, dim)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   /** Streaming as-of enrichment over micro-batches of purchase rows
-    * `(event_id, user_id, es)`. The signup dimension is read and persisted
-    * once — every micro-batch re-broadcasts from the cached relation
-    * instead of re-scanning parquet. Returned alongside the query so the
-    * caller manages the cache lifecycle (same contract as
-    * [[streamAnnEnrich]]).
+    * `(event_id, user_id, es)` through [[asofEnrichPlan]]. The signup
+    * dimension is read and persisted once — every micro-batch
+    * re-broadcasts from the cached relation instead of re-scanning
+    * parquet. Returned alongside the query so the caller manages the cache
+    * lifecycle (same contract as [[streamAnnEnrich]]).
     */
   def streamAsofEnrich(df: DataFrame, spark: SparkSession, sfDir: String,
       outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     graft.functions.VecFunctions.register(spark)
     graft.plans.GraftStrategies.register(spark)
     val dim = Tables.events(spark, sfDir)
       .filter(col("event_type") === "signup")
       .select(col("user_id").as("s_uid"), unix_timestamp(col("ts")).as("s_es"))
       .persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        asofEnrichBatch(batch.toDF(), id, dim, outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(asofEnrichPlan(batch, dim), outDir, id)
+    }
     (q, dim)
   }
 
   // ------------------------------------------------- streaming LM scoring
-  /** One micro-batch of the streaming perplexity-scoring leg — the online
-    * twin of the batch `lm_perplexity` query: arriving `(doc_id, text)`
+  /** Streaming perplexity scoring over micro-batches of `(doc_id, text)`
+    * rows — the online twin of the batch `lm_perplexity` query: arriving
     * rows are scored against the PERSISTED bigram-LM model
     * (`Scoring.writeLmModel` artifacts) through literally the same
     * `Scoring.lmScoreBatch` composition the batch serving path plans.
     * Enrichment is per-record — no cross-batch state — so replay parity
-    * with the batch scoring is exact, and a redelivered batch
-    * byte-replaces its own `batch_id=<id>` directory instead of appending
-    * duplicates (the [[upsertBatch]] idempotence discipline). This is the
-    * ingestion-time quality gate: a pipeline scores documents as they
-    * arrive against a model trained offline on the accepted corpus.
-    */
-  def lmScoreSinkBatch(batch: DataFrame, id: Long, c2: DataFrame,
-      c1: DataFrame, v: DataFrame, outDir: String): Unit =
-    graft.operators.Scoring.lmScoreBatch(batch, c2, c1, v)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
-  /** Streaming LM scoring over micro-batches of `(doc_id, text)` rows.
+    * with the batch scoring is exact. This is the ingestion-time quality
+    * gate: a pipeline scores documents as they arrive against a model
+    * trained offline on the accepted corpus.
+    *
     * The model relations are read and persisted once — every micro-batch
     * joins against the cached vocabulary-bounded statistics instead of
     * re-scanning the model parquet (and the corpus is NEVER scanned:
@@ -1048,18 +953,16 @@ object Streams {
     */
   def streamLmScore(df: DataFrame, spark: SparkSession, modelDir: String,
       outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, Seq[DataFrame]) = {
+      : (StreamingQuery, Seq[DataFrame]) = {
     graft.models.ModelManifest.validate(spark, modelDir, "lm_bigram")
     val cached = Seq(
       spark.read.parquet(s"$modelDir/c2").persist(),
       spark.read.parquet(s"$modelDir/c1").persist(),
       spark.read.parquet(s"$modelDir/meta").persist())
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        lmScoreSinkBatch(batch.toDF(), id, cached(0), cached(1), cached(2), outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.Scoring
+        .lmScoreBatch(batch, cached(0), cached(1), cached(2)), outDir, id)
+    }
     (q, cached)
   }
 
@@ -1068,26 +971,17 @@ object Streams {
     * text)` rows against the persisted dense ratio model
     * (`Scoring.writeDsirModel`) — the third instance of the
     * train-offline/serve-online contract (ANN index, LM model, now DSIR).
-    * The B-row model is cached once; enrichment is per-record, replay
-    * parity with the batch serving path is exact, and a redelivered batch
-    * byte-replaces its own directory.
+    * The B-row model is cached once; enrichment is per-record, so replay
+    * parity with the batch serving path is exact.
     */
-  def dsirScoreSinkBatch(batch: DataFrame, id: Long, ratios: DataFrame,
-      outDir: String): Unit =
-    graft.operators.Scoring.dsirScoreBatch(batch, ratios)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   def streamDsirScore(df: DataFrame, spark: SparkSession, modelDir: String,
       outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     graft.models.ModelManifest.validate(spark, modelDir, "dsir")
     val ratios = spark.read.parquet(s"$modelDir/ratios").persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        dsirScoreSinkBatch(batch.toDF(), id, ratios, outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.Scoring.dsirScoreBatch(batch, ratios), outDir, id)
+    }
     (q, ratios)
   }
 
@@ -1097,17 +991,12 @@ object Streams {
     * the fourth instance of the train-offline/serve-online contract (ANN
     * index, LM model, DSIR ratios, now BM25). The |Q|-relevant slice of
     * the model is cached once; each micro-batch tokenizes only its own
-    * probes, and a redelivered batch byte-replaces its own directory.
+    * probes.
     */
-  def bm25ScoreSinkBatch(batch: DataFrame, id: Long, df: DataFrame,
-      stats: DataFrame, terms: Seq[String], outDir: String): Unit =
-    graft.operators.Scoring.bm25ScoreBatch(batch, df, stats, terms)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   def streamBm25Score(df: DataFrame, spark: SparkSession, modelDir: String,
       outDir: String, checkpoint: String,
       terms: Seq[String] = graft.operators.Scoring.Bm25Terms)
-      : (org.apache.spark.sql.streaming.StreamingQuery, Seq[DataFrame]) = {
+      : (StreamingQuery, Seq[DataFrame]) = {
     graft.models.ModelManifest.validate(spark, modelDir, "bm25")
     // cache the |Q|-relevant slice, not the whole vocabulary: the model
     // df is |vocabulary| rows on disk, but this stream only ever scores
@@ -1117,12 +1006,10 @@ object Streams {
       spark.read.parquet(s"$modelDir/df")
         .filter(col("term").isin(terms: _*)).persist(),
       spark.read.parquet(s"$modelDir/meta").persist())
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        bm25ScoreSinkBatch(batch.toDF(), id, cached(0), cached(1), terms, outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.Scoring
+        .bm25ScoreBatch(batch, cached(0), cached(1), terms), outDir, id)
+    }
     (q, cached)
   }
 
@@ -1133,25 +1020,17 @@ object Streams {
     * new content or re-crawled mass" signal. Serving goes through
     * literally the same `TextAnalysis.noveltyScoreBatch` composition as
     * the batch path (replay parity exact, per-record enrichment, no
-    * cross-batch state), and a redelivered batch byte-replaces its own
-    * `batch_id=<id>` directory.
+    * cross-batch state).
     */
-  def noveltyScoreSinkBatch(batch: DataFrame, id: Long, gramDf: DataFrame,
-      outDir: String): Unit =
-    graft.operators.TextAnalysis.noveltyScoreBatch(batch, gramDf)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   def streamNoveltyScore(df: DataFrame, spark: SparkSession, modelDir: String,
       outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     graft.models.ModelManifest.validate(spark, modelDir, "ngram_novelty")
     val gramDf = spark.read.parquet(s"$modelDir/gramdf").persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        noveltyScoreSinkBatch(batch.toDF(), id, gramDf, outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.TextAnalysis
+        .noveltyScoreBatch(batch, gramDf), outDir, id)
+    }
     (q, gramDf)
   }
 
@@ -1159,31 +1038,22 @@ object Streams {
   /** Streaming shard router — the training-shard DELIVERY path: arriving
     * `(doc_id, text)` rows are assigned their deterministic shard (the
     * `shard_assignment`/`shard_mix_audit` key, ONE definition) and
-    * written `partitionBy(shard)`, so the landing layout IS the shard
-    * layout a training run consumes and a document lands in the same
-    * shard no matter which micro-batch (or redelivery) carries it. A
-    * redelivered batch byte-replaces its own `batch_id=<id>` directory
-    * (the idempotence discipline), with the shard partitioning nested
-    * inside it — a consumer reading `outDir` sees both partition columns
-    * and shard filters prune directories. The batch query's within-shard
-    * positions are a corpus-level order and deliberately NOT assigned
-    * here — an unbounded stream has no final corpus to rank within;
-    * positions come from the batch pass over the closed corpus.
+    * written `partitionBy(shard)` inside each batch directory, so the
+    * landing layout IS the shard layout a training run consumes and a
+    * document lands in the same shard no matter which micro-batch (or
+    * redelivery) carries it. A consumer reading `outDir` sees both
+    * partition columns and shard filters prune directories. The batch
+    * query's within-shard positions are a corpus-level order and
+    * deliberately NOT assigned here — an unbounded stream has no final
+    * corpus to rank within; positions come from the batch pass over the
+    * closed corpus.
     */
-  def shardRouteBatch(batch: DataFrame, id: Long, outDir: String): Unit =
-    batch
-      .withColumn("shard", graft.operators.TextAnalysis.shardKey)
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$outDir/batch_id=$id")
-
   def streamShardRoute(df: DataFrame, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        shardRouteBatch(batch.toDF(), id, outDir)
-      }
-      .start()
+      : StreamingQuery =
+    eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(batch.withColumn("shard", graft.operators.TextAnalysis.shardKey),
+        outDir, id, "shard")
+    }
 
   // ----------------------------------------- streaming quality classifier
   /** Streaming distilled-quality scoring over micro-batches of `(doc_id,
@@ -1192,25 +1062,16 @@ object Streams {
     * fastText pattern: the expensive gate labeled a corpus once, the
     * cheap student model screens ingest forever after. The 13-value
     * model row is read ONCE at stream start and inlined as literals into
-    * every micro-batch's codegen projection (no join at all); a
-    * redelivered batch byte-replaces its own `batch_id=<id>` directory.
+    * every micro-batch's codegen projection (no join at all).
     */
-  def qcScoreSinkBatch(batch: DataFrame, id: Long, w: Array[Double],
-      mu: Array[Double], sd: Array[Double], outDir: String): Unit =
-    graft.operators.Scoring.qcScoreBatch(batch, w, mu, sd)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   def streamQualityClassify(df: DataFrame, spark: SparkSession,
       modelDir: String, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     graft.models.ModelManifest.validate(spark, modelDir, "quality_classifier")
     val (w, mu, sd) = graft.operators.Scoring.qcModelFromDir(spark, modelDir)
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        qcScoreSinkBatch(batch.toDF(), id, w, mu, sd, outDir)
-      }
-      .start()
+    eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.Scoring.qcScoreBatch(batch, w, mu, sd), outDir, id)
+    }
   }
 
   // --------------------------------------------- streaming semdedup screen
@@ -1221,28 +1082,19 @@ object Streams {
     * driver read at stream start; the kept set is cached; each
     * micro-batch goes through literally the same
     * `Similarity.semdedupScreenBatch` composition as the batch path
-    * (replay parity exact), and a redelivered batch byte-replaces its
-    * own `batch_id=<id>` directory.
+    * (replay parity exact).
     */
-  def semdedupScreenSinkBatch(batch: DataFrame, id: Long,
-      codebook: Seq[(Int, Array[Float])], kept: DataFrame,
-      outDir: String): Unit =
-    graft.operators.Similarity.semdedupScreenBatch(batch, codebook, kept)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   def streamSemdedupScreen(df: DataFrame, spark: SparkSession,
       indexDir: String, outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     graft.models.ModelManifest.validate(spark, indexDir, "semdedup_index")
     graft.functions.VecFunctions.register(spark)
     val codebook = graft.operators.Similarity.codebookFromDir(spark, indexDir)
     val kept = spark.read.parquet(s"$indexDir/kept").persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        semdedupScreenSinkBatch(batch.toDF(), id, codebook, kept, outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.Similarity
+        .semdedupScreenBatch(batch, codebook, kept), outDir, id)
+    }
     (q, kept)
   }
 
@@ -1253,34 +1105,28 @@ object Streams {
     * every prior batch's appends — so a near-duplicate of a vector first
     * seen three batches ago is caught without any retrain — then appends
     * its own cell-assigned rows under `indexDir/appended/batch_id=<id>`.
-    * Idempotent on redelivery from both sides: the screen reads the
-    * appended root through a `batch_id =!= id` partition filter, and the
-    * re-append byte-replaces its own directory. Offline maintenance:
+    * The screen reads the appended root through a `batch_id =!= id`
+    * partition filter, so a redelivered batch never screens against its
+    * own earlier append. Offline maintenance:
     * `Similarity.compactAnnIndex` (fold appends, latest-wins) and
     * `Similarity.annIndexDrift` (decide when a retrain is due instead).
     */
   def annIngestSinkBatch(batch: DataFrame, id: Long,
       codebook: Seq[(Int, Array[Float])], indexDir: String,
       outDir: String): Unit = {
-    graft.operators.Similarity
-      .annScreenGrownBatch(batch, codebook, indexDir, excludeBatch = id)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+    writeBatchDir(graft.operators.Similarity
+      .annScreenGrownBatch(batch, codebook, indexDir, excludeBatch = id), outDir, id)
     graft.operators.Similarity
       .annIndexAppendBatch(batch, codebook, indexDir, id)
   }
 
   def streamAnnIngest(df: DataFrame, spark: SparkSession, indexDir: String,
       outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     graft.models.ModelManifest.validate(spark, indexDir, "ann_ivf_index")
     graft.functions.VecFunctions.register(spark)
     val codebook = graft.operators.Similarity.codebookFromDir(spark, indexDir)
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        annIngestSinkBatch(batch.toDF(), id, codebook, indexDir, outDir)
-      }
-      .start()
+    eachBatch(df, checkpoint)(annIngestSinkBatch(_, _, codebook, indexDir, outDir))
   }
 
   // --------------------------------------------- streaming semdedup ingest
@@ -1292,36 +1138,24 @@ object Streams {
     * `indexDir/admitted/batch_id=<id>` — so a near-dup of a vector
     * admitted three batches ago is REJECTED, which the frozen screen
     * cannot do. Offline maintenance: `Similarity.compactSemdedupIndex`.
-    * Idempotent on redelivery from both sides (own-batch partition
-    * filter on the read, byte-replace on both writes). */
+    * The read side excludes the batch's own earlier admits. */
   def semdedupIngestSinkBatch(batch: DataFrame, id: Long,
       codebook: Seq[(Int, Array[Float])], indexDir: String,
-      outDir: String): Unit = {
-    val v = graft.operators.Similarity
-      .semdedupIngestVerdicts(batch, codebook, indexDir, excludeBatch = id)
-      .persist()
-    try {
-      v.select("vec_id", "n_dup_kept", "is_dup")
-        .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-      v.filter(!col("is_dup") && col("nrm") > 0)
-        .select("vec_id", "embedding", "nrm", "cell")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexDir/admitted/batch_id=$id")
-    } finally { v.unpersist(); () }
-  }
+      outDir: String): Unit =
+    withPersisted(graft.operators.Similarity
+        .semdedupIngestVerdicts(batch, codebook, indexDir, excludeBatch = id)) { v =>
+      writeBatchDir(v.select("vec_id", "n_dup_kept", "is_dup"), outDir, id)
+      writeBatchDir(v.filter(!col("is_dup") && col("nrm") > 0)
+        .select("vec_id", "embedding", "nrm", "cell"), s"$indexDir/admitted", id, "cell")
+    }
 
   def streamSemdedupIngest(df: DataFrame, spark: SparkSession,
       indexDir: String, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     graft.models.ModelManifest.validate(spark, indexDir, "semdedup_index")
     graft.functions.VecFunctions.register(spark)
     val codebook = graft.operators.Similarity.codebookFromDir(spark, indexDir)
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        semdedupIngestSinkBatch(batch.toDF(), id, codebook, indexDir, outDir)
-      }
-      .start()
+    eachBatch(df, checkpoint)(semdedupIngestSinkBatch(_, _, codebook, indexDir, outDir))
   }
 
   // --------------------------------------------- streaming ANN drift monitor
@@ -1333,18 +1167,10 @@ object Streams {
     * stream start (k-row-bounded groupBy feeds the TV join, the corpus
     * itself is scanned once); per-record work is one frozen-codebook
     * assignment projection. No cross-batch state: replay parity with the
-    * batch metric is exact, and a redelivered batch byte-replaces its
-    * own directory. */
-  def annDriftSinkBatch(batch: DataFrame, id: Long,
-      codebook: Seq[(Int, Array[Float])], baseCells: DataFrame,
-      ownFitErr: Double, outDir: String): Unit =
-    graft.operators.Similarity
-      .driftVerdictBatch(batch, codebook, baseCells, ownFitErr)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
+    * batch metric is exact. */
   def streamAnnDriftMonitor(df: DataFrame, spark: SparkSession,
       indexDir: String, outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     graft.models.ModelManifest.validate(spark, indexDir, "ann_ivf_index")
     graft.functions.VecFunctions.register(spark)
     val codebook = graft.operators.Similarity.codebookFromDir(spark, indexDir)
@@ -1353,12 +1179,10 @@ object Streams {
     // the retrain-ratio denominator: the index's own mean fit under its
     // own codebook — one pass at monitor start, a scalar thereafter
     val ownFitErr = graft.operators.Similarity.indexOwnFitErr(spark, indexDir)
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        annDriftSinkBatch(batch.toDF(), id, codebook, baseCells, ownFitErr, outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.Similarity
+        .driftVerdictBatch(batch, codebook, baseCells, ownFitErr), outDir, id)
+    }
     (q, baseCells)
   }
 
@@ -1377,24 +1201,18 @@ object Streams {
     * the streaming path produces the batch query's full four-status
     * report. No cross-batch state inside the engine (the presence log is
     * the sink's, not the state store's): replay parity with the batch
-    * classification is exact and a redelivered batch byte-replaces its
-    * own directory. */
+    * classification is exact. */
   def diffSinkBatch(batch: DataFrame, id: Long, prev: DataFrame,
-      outDir: String): Unit = {
-    val b = batch.persist() // read by the verdict and the presence log
-    try {
-      graft.operators.DataQuality.diffVerdictBatch(b, prev)
-        .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+      outDir: String): Unit =
+    withPersisted(batch) { b => // read by the verdict and the presence log
+      writeBatchDir(graft.operators.DataQuality.diffVerdictBatch(b, prev), outDir, id)
       // presence log: ids only (8 bytes/doc — at 100 TB this is the
       // id-projection of the snapshot, bucketable by doc_id), the witness
-      // set [[diffCloseSnapshot]] anti-joins at end of snapshot. Same
-      // batch_id byte-replace idempotency as the verdict itself, and
-      // duplicate ids across a replay are harmless (anti-join semantics
-      // need presence, not multiplicity).
-      b.select(col("doc_id"))
-        .write.mode("overwrite").parquet(s"$outDir/seen/batch_id=$id")
-    } finally { b.unpersist(); () }
-  }
+      // set [[diffCloseSnapshot]] anti-joins at end of snapshot. Duplicate
+      // ids across a replay are harmless (anti-join semantics need
+      // presence, not multiplicity).
+      writeBatchDir(b.select(col("doc_id")), s"$outDir/seen", id)
+    }
 
   /** End-of-snapshot reconciliation — the `removed` verdict the per-batch
     * classification deliberately cannot emit (a batch witnesses presence,
@@ -1414,16 +1232,10 @@ object Streams {
 
   def streamCorpusDiff(df: DataFrame, spark: SparkSession, sfDir: String,
       outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     val prev = graft.operators.DataQuality
       .prevSnapshot(graft.Tables.documents(spark, sfDir)).persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        diffSinkBatch(batch.toDF(), id, prev, outDir)
-      }
-      .start()
-    (q, prev)
+    (eachBatch(df, checkpoint)(diffSinkBatch(_, _, prev, outDir)), prev)
   }
 
   // --------------------------------------------- streaming media ingest
@@ -1442,29 +1254,19 @@ object Streams {
     // the checkpoint in a crash loop) and must not silently vanish — it
     // goes to an `unnamed/` quarantine with its path, the dead-letter
     // discipline applied to naming instead of parsing
-    val parted = batch.persist()
-    try {
-      parted.filter(col("doc_id").isNull).select(col("path"))
-        .write.mode("overwrite").parquet(s"$outDir/unnamed/batch_id=$id")
-      graft.operators.Multimodal.resizeGeometry(
+    withPersisted(batch) { parted =>
+      writeBatchDir(parted.filter(col("doc_id").isNull).select(col("path")),
+        s"$outDir/unnamed", id)
+      writeBatchDir(graft.operators.Multimodal.resizeGeometry(
         parted.filter(col("doc_id").isNotNull)
           .select(col("doc_id"), col("payload"))
           .as[(Long, Array[Byte])]
           .mapPartitions(_.map { case (docId, bytes) =>
             graft.operators.Multimodal.decodeStub(docId, bytes) })
-          .toDF())
-        .write.mode("overwrite").parquet(s"$outDir/decoded/batch_id=$id")
-    } finally { parted.unpersist(); () }
+          .toDF()), s"$outDir/decoded", id)
+    }
   }
 
-  /** Streaming media ingest: an unbounded `binaryFile` directory source
-    * (files dropped into `dir` are consumed exactly once per checkpoint —
-    * the raw-media landing-zone pattern) decoded and geometry-planned at
-    * ingest time, `batch_id=` byte-replace idempotent. `doc_id` derives
-    * from the digits of the file name (the landing convention); a real
-    * deployment swaps the stub inside [[mediaIngestBatch]] for a codec
-    * and keeps this wiring.
-    */
   /** The fixed `binaryFile` source schema (streaming sources require it
     * explicitly; the format ignores user schemas that deviate). */
   private val BinaryFileSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -1477,9 +1279,16 @@ object Streams {
     org.apache.spark.sql.types.StructField("content",
       org.apache.spark.sql.types.BinaryType)))
 
+  /** Streaming media ingest: an unbounded `binaryFile` directory source
+    * (files dropped into `dir` are consumed exactly once per checkpoint —
+    * the raw-media landing-zone pattern) decoded and geometry-planned at
+    * ingest time. `doc_id` derives from the digits of the file name (the
+    * landing convention); a real deployment swaps the stub inside
+    * [[mediaIngestBatch]] for a codec and keeps this wiring.
+    */
   def streamMediaIngest(spark: SparkSession, dir: String, outDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("binaryFile").schema(BinaryFileSchema).load(dir)
+      checkpoint: String): StreamingQuery =
+    eachBatch(spark.readStream.format("binaryFile").schema(BinaryFileSchema).load(dir)
       .select(
         col("path"),
         // digits immediately before the extension — anchored to the file
@@ -1488,13 +1297,8 @@ object Streams {
         // the sink, never a crash
         expr("try_cast(regexp_extract(path, '(\\\\d+)\\\\.\\\\w+$', 1) AS LONG)")
           .as("doc_id"),
-        col("content").as("payload"))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        mediaIngestBatch(batch.toDF(), id, outDir)
-      }
-      .start()
+        col("content").as("payload")),
+      checkpoint)(mediaIngestBatch(_, _, outDir))
 
   // ------------------------------------------- streaming decontamination
   /** Streaming benchmark-decontamination gate over micro-batches of
@@ -1505,35 +1309,27 @@ object Streams {
     * overlapping docs to `contaminated/` RETAINING `n_shared_grams` (the
     * blame column, the quality-gate quarantine discipline). The left
     * join + coalesce makes routing total: every arrived row lands in
-    * exactly one route. Both sinks `batch_id=` byte-replace idempotent.
+    * exactly one route.
     */
   def decontaminateBatch(batch: DataFrame, id: Long, benchG: DataFrame,
       outDir: String): Unit = {
     val counts = graft.operators.Dedup.ngramOverlapCounts(batch, benchG)
-    val flagged = batch
-      .join(counts, Seq("doc_id"), "left")
-      .select(batch.columns.map(col) :+
-        coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"): _*)
-      .persist()
-    try {
-      flagged.filter(col("n_shared_grams") === 0).drop("n_shared_grams")
-        .write.mode("overwrite").parquet(s"$outDir/clean/batch_id=$id")
-      flagged.filter(col("n_shared_grams") > 0)
-        .write.mode("overwrite").parquet(s"$outDir/contaminated/batch_id=$id")
-    } finally { flagged.unpersist(); () }
+    withPersisted(batch
+        .join(counts, Seq("doc_id"), "left")
+        .select(batch.columns.map(col) :+
+          coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"): _*)) { flagged =>
+      writeBatchDir(flagged.filter(col("n_shared_grams") === 0).drop("n_shared_grams"),
+        s"$outDir/clean", id)
+      writeBatchDir(flagged.filter(col("n_shared_grams") > 0),
+        s"$outDir/contaminated", id)
+    }
   }
 
   def streamDecontaminate(df: DataFrame, spark: SparkSession, sfDir: String,
       outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     val benchG = graft.operators.Dedup.benchGramHashes(spark, sfDir).persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        decontaminateBatch(batch.toDF(), id, benchG, outDir)
-      }
-      .start()
-    (q, benchG)
+    (eachBatch(df, checkpoint)(decontaminateBatch(_, _, benchG, outDir)), benchG)
   }
 
   // ------------------------------------------------ streaming BPE apply
@@ -1543,22 +1339,13 @@ object Streams {
     * `TextAnalysis.bpeTrain`/`bpePairCounts`, serve everywhere). The
     * merge list is a plan-build constant (≤20 literal replaces unrolled
     * into whole-stage codegen — no state, no join), so scoring is
-    * per-record and replay parity with the batch query is exact; a
-    * redelivered batch byte-replaces its own directory.
+    * per-record and replay parity with the batch query is exact.
     */
-  def bpeApplySinkBatch(batch: DataFrame, id: Long, merges: Seq[String],
-      outDir: String): Unit =
-    graft.operators.TextAnalysis.bpeApplyFrozen(batch, merges)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   def streamBpeApply(df: DataFrame, merges: Seq[String], outDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        bpeApplySinkBatch(batch.toDF(), id, merges, outDir)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.TextAnalysis.bpeApplyFrozen(batch, merges), outDir, id)
+    }
 
   // -------------------------------------------- streaming vocab coverage
   /** Streaming OOV monitoring under a FROZEN persisted vocabulary
@@ -1569,38 +1356,18 @@ object Streams {
     * reports via the shared `coverageTail` (additive components:
     * `n_tokens`/`covered_tokens` sum across batches; a dashboard
     * recomputes the rate from the sums). The K-row vocabulary is cached
-    * once; `batch_id=` byte-replace idempotent.
+    * once.
     */
-  def vocabCoverageSinkBatch(batch: DataFrame, id: Long, vocab: DataFrame,
-      outDir: String): Unit =
-    graft.operators.TextAnalysis.vocabCoverageBatch(batch, vocab)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   def streamVocabCoverage(df: DataFrame, spark: SparkSession, modelDir: String,
       outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     graft.models.ModelManifest.validate(spark, modelDir, "tokenizer_vocab")
     val vocab = spark.read.parquet(s"$modelDir/vocab").persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        vocabCoverageSinkBatch(batch.toDF(), id, vocab, outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.TextAnalysis.vocabCoverageBatch(batch, vocab), outDir, id)
+    }
     (q, vocab)
   }
-
-  /** Streaming BPE application served from the PERSISTED merge model
-    * (`TextAnalysis.writeBpeMerges`) — the from-model convenience over
-    * [[streamBpeApply]]: the ≤20-row merge table is read once at query
-    * build and unrolled into the codegen projection.
-    */
-  def streamBpeApplyFromModel(df: DataFrame, spark: SparkSession,
-      modelDir: String, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamBpeApply(df,
-      graft.operators.TextAnalysis.bpeMergesFromModel(spark, modelDir),
-      outDir, checkpoint)
 
   // ------------------------------------------------ streaming quality gate
   /** One micro-batch of the streaming quality gate: arriving `(doc_id,
@@ -1610,19 +1377,15 @@ object Streams {
     * corpus, rejected rows to a quarantine that RETAINS the per-rule
     * verdict columns — the blame a curation operator reads to tune
     * thresholds (the dead-letter discipline of [[appendWithDeadLetter]],
-    * applied to semantic rejection instead of parse failure). Both sinks
-    * are `batch_id=` byte-replace idempotent; the verdict frame is
-    * persisted so the two routes score each document once, not twice.
+    * applied to semantic rejection instead of parse failure). The verdict
+    * frame is persisted so the two routes score each document once, not
+    * twice.
     */
-  def qualityGateBatch(batch: DataFrame, id: Long, outDir: String): Unit = {
-    val v = graft.operators.TextAnalysis.gopherVerdicts(batch).persist()
-    try {
-      v.filter(col("keep")).drop("keep")
-        .write.mode("overwrite").parquet(s"$outDir/accepted/batch_id=$id")
-      v.filter(!col("keep")).drop("keep")
-        .write.mode("overwrite").parquet(s"$outDir/rejected/batch_id=$id")
-    } finally { v.unpersist(); () }
-  }
+  def qualityGateBatch(batch: DataFrame, id: Long, outDir: String): Unit =
+    withPersisted(graft.operators.TextAnalysis.gopherVerdicts(batch)) { v =>
+      writeBatchDir(v.filter(col("keep")).drop("keep"), s"$outDir/accepted", id)
+      writeBatchDir(v.filter(!col("keep")).drop("keep"), s"$outDir/rejected", id)
+    }
 
   // ------------------------------------------- streaming KL drift monitor
   /** Streaming token-distribution drift monitor: each micro-batch of
@@ -1630,32 +1393,20 @@ object Streams {
     * against the persisted corpus model
     * (`TextAnalysis.writeTokenKlModel`) — one (batch_id, n_docs,
     * n_tokens, kl_nats) row per batch, the earliest off-distribution
-    * alarm an ingest pipeline gets. Model relations cached once; a
-    * redelivered batch byte-replaces its own directory.
+    * alarm an ingest pipeline gets; `batch_id` comes back from the batch
+    * directory on read. Model relations cached once.
     */
-  def tokenKlSinkBatch(batch: DataFrame, id: Long, support: DataFrame,
-      meta: DataFrame, outDir: String): Unit =
-    // batch_id comes back via partition-directory inference on read — the
-    // sibling sinks' convention; a duplicate data column would shadow the
-    // inferred partition column (Spark's data-schema-wins overlap rule).
-    // Layout contract: inference types small ids as INTEGER, so readers
-    // that want a Long must cast — never rely on boxed numeric equality.
-    graft.operators.TextAnalysis.tokenKlScoreBatch(batch, support, meta)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   def streamTokenKl(df: DataFrame, spark: SparkSession, modelDir: String,
       outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, Seq[DataFrame]) = {
+      : (StreamingQuery, Seq[DataFrame]) = {
     graft.models.ModelManifest.validate(spark, modelDir, "token_kl")
     val cached = Seq(
       spark.read.parquet(s"$modelDir/support").persist(),
       spark.read.parquet(s"$modelDir/meta").persist())
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        tokenKlSinkBatch(batch.toDF(), id, cached(0), cached(1), outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.TextAnalysis
+        .tokenKlScoreBatch(batch, cached(0), cached(1)), outDir, id)
+    }
     (q, cached)
   }
 
@@ -1665,24 +1416,15 @@ object Streams {
     * index (`Dedup.writeWinnowIndex`) — ingest-time detection of
     * documents that quote/embed ≥ 40-char runs of the indexed corpus.
     * The index relation is cached once for the stream's lifetime (two
-    * long columns); each micro-batch fingerprints only its own rows, and
-    * a redelivered batch byte-replaces its own directory.
+    * long columns); each micro-batch fingerprints only its own rows.
     */
-  def winnowScreenSinkBatch(batch: DataFrame, id: Long, indexFps: DataFrame,
-      outDir: String): Unit =
-    graft.operators.Dedup.winnowScreenBatch(batch, indexFps)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   def streamWinnowScreen(df: DataFrame, spark: SparkSession, indexDir: String,
       outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     val fps = graft.operators.Dedup.winnowIndexFps(spark, indexDir).persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        winnowScreenSinkBatch(batch.toDF(), id, fps, outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.Dedup.winnowScreenBatch(batch, fps), outDir, id)
+    }
     (q, fps)
   }
 
@@ -1692,10 +1434,10 @@ object Streams {
     * fingerprints, then appends its own docs' fingerprints under
     * `indexDir/appended/batch_id=<id>` — so a document quoting one that
     * itself ARRIVED three batches ago is caught without any reindex.
-    * Idempotent on redelivery from both sides (own-batch partition
-    * filter on the read, byte-replace on the write). The appends carry
-    * NO hot-cap — hotness is a corpus property a batch cannot see;
-    * `Dedup.compactWinnowIndex` re-applies it globally at fold time. */
+    * The read side excludes the batch's own earlier append (own-batch
+    * partition filter). The appends carry NO hot-cap — hotness is a
+    * corpus property a batch cannot see; `Dedup.compactWinnowIndex`
+    * re-applies it globally at fold time. */
   def winnowScreenGrowSinkBatch(batch: DataFrame, id: Long,
       baseFps: DataFrame, indexDir: String, outDir: String): Unit = {
     val s = batch.sparkSession
@@ -1707,25 +1449,17 @@ object Streams {
       catch { case _: org.apache.spark.sql.AnalysisException =>
         baseFps.select("doc_id", "fp").limit(0)
       }
-    graft.operators.Dedup.winnowScreenBatch(batch,
-      baseFps.select("doc_id", "fp").unionByName(prior))
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-    graft.operators.Dedup.winnowFingerprints(
-        batch.select(col("doc_id"), col("text")))
-      .write.mode("overwrite").parquet(s"$appendedRoot/batch_id=$id")
+    writeBatchDir(graft.operators.Dedup.winnowScreenBatch(batch,
+      baseFps.select("doc_id", "fp").unionByName(prior)), outDir, id)
+    writeBatchDir(graft.operators.Dedup.winnowFingerprints(
+      batch.select(col("doc_id"), col("text"))), appendedRoot, id)
   }
 
   def streamWinnowScreenGrow(df: DataFrame, spark: SparkSession,
       indexDir: String, outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     val fps = graft.operators.Dedup.winnowIndexFps(spark, indexDir).persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        winnowScreenGrowSinkBatch(batch.toDF(), id, fps, indexDir, outDir)
-      }
-      .start()
-    (q, fps)
+    (eachBatch(df, checkpoint)(winnowScreenGrowSinkBatch(_, _, fps, indexDir, outDir)), fps)
   }
 
   // --------------------------------------- streaming edit-distance screen
@@ -1736,24 +1470,16 @@ object Streams {
     * last dedup family without a streaming twin). The manifest-validated
     * index relation is cached once for the stream's lifetime; each
     * micro-batch generates probe keys for only its own names (≤ 75 per
-    * name), and a redelivered batch byte-replaces its own directory.
+    * name).
     */
-  def editScreenSinkBatch(batch: DataFrame, id: Long, segIndex: DataFrame,
-      outDir: String): Unit =
-    graft.operators.TextAnalysis.editScreenBatch(batch, segIndex)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-
   def streamEditScreen(df: DataFrame, spark: SparkSession, indexDir: String,
       outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     val segs = graft.operators.TextAnalysis
       .editIndexSegments(spark, indexDir).persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        editScreenSinkBatch(batch.toDF(), id, segs, outDir)
-      }
-      .start()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      writeBatchDir(graft.operators.TextAnalysis.editScreenBatch(batch, segs), outDir, id)
+    }
     (q, segs)
   }
 
@@ -1762,15 +1488,14 @@ object Streams {
     * base history PLUS every prior batch's accumulated segments, then
     * appends its own names' segments under `indexDir/appended/
     * batch_id=<id>` — so a near-dup of a name first seen three batches
-    * ago is caught without any reindex of history. Idempotent on
-    * redelivery from both sides: the screen reads the appended root
-    * THROUGH a `batch_id =!= id` partition filter (a redelivered batch
-    * never sees its own previous write — partition pruning drops the
-    * dir), and the re-append byte-replaces its own directory. The
-    * per-batch cost is probe-keys(batch) + a scan of the accumulated
-    * segment relation — the standard incremental-index trade; compaction
-    * of `appended/` back into the base via [[graft.operators.TextAnalysis.writeEditIndex]]
-    * is the offline maintenance job.
+    * ago is caught without any reindex of history. The screen reads the
+    * appended root THROUGH a `batch_id =!= id` partition filter (a
+    * redelivered batch never sees its own previous write — partition
+    * pruning drops the dir). The per-batch cost is probe-keys(batch) + a
+    * scan of the accumulated segment relation — the standard
+    * incremental-index trade; compaction of `appended/` back into the
+    * base via [[graft.operators.TextAnalysis.writeEditIndex]] is the
+    * offline maintenance job.
     */
   def editScreenGrowSinkBatch(batch: DataFrame, id: Long, baseSegs: DataFrame,
       indexDir: String, outDir: String): Unit = {
@@ -1783,45 +1508,33 @@ object Streams {
       catch { case _: org.apache.spark.sql.AnalysisException =>
         baseSegs.limit(0).select("name_b", "blk_len", "blk_i", "seg")
       }
-    graft.operators.TextAnalysis
+    writeBatchDir(graft.operators.TextAnalysis
       .editScreenBatch(batch, baseSegs.select("name_b", "blk_len", "blk_i", "seg")
-        .unionByName(prior))
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-    graft.operators.TextAnalysis
-      .editSegmentsBuild(batch.select(col("name")).distinct())
-      .write.mode("overwrite").parquet(s"$appendedRoot/batch_id=$id")
+        .unionByName(prior)), outDir, id)
+    writeBatchDir(graft.operators.TextAnalysis
+      .editSegmentsBuild(batch.select(col("name")).distinct()), appendedRoot, id)
   }
 
   def streamEditScreenGrow(df: DataFrame, spark: SparkSession,
       indexDir: String, outDir: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
+      : (StreamingQuery, DataFrame) = {
     val segs = graft.operators.TextAnalysis
       .editIndexSegments(spark, indexDir).persist()
-    val q = df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        editScreenGrowSinkBatch(batch.toDF(), id, segs, indexDir, outDir)
-      }
-      .start()
-    (q, segs)
+    (eachBatch(df, checkpoint)(editScreenGrowSinkBatch(_, _, segs, indexDir, outDir)), segs)
   }
 
   /** Per-micro-batch blocklist routing: clean rows to `clean/`, flagged
-    * rows to `flagged/` (hit counts and bp retained as the blame), each
-    * batch byte-replacing its own directory on redelivery. The verdict is
-    * `TextAnalysis.blocklistVerdicts` — the exact expression the batch
-    * `blocklist_screen` report aggregates, and total (NULL/empty text is
-    * clean, never dropped), so clean + flagged = arrived on every batch.
+    * rows to `flagged/` (hit counts and bp retained as the blame). The
+    * verdict is `TextAnalysis.blocklistVerdicts` — the exact expression
+    * the batch `blocklist_screen` report aggregates, and total (NULL/empty
+    * text is clean, never dropped), so clean + flagged = arrived on every
+    * batch.
     */
-  def blocklistScreenBatch(batch: DataFrame, id: Long, outDir: String): Unit = {
-    val v = graft.operators.TextAnalysis.blocklistVerdicts(batch).persist()
-    try {
-      v.filter(!col("flagged")).drop("flagged")
-        .write.mode("overwrite").parquet(s"$outDir/clean/batch_id=$id")
-      v.filter(col("flagged")).drop("flagged")
-        .write.mode("overwrite").parquet(s"$outDir/flagged/batch_id=$id")
-    } finally { v.unpersist(); () }
-  }
+  def blocklistScreenBatch(batch: DataFrame, id: Long, outDir: String): Unit =
+    withPersisted(graft.operators.TextAnalysis.blocklistVerdicts(batch)) { v =>
+      writeBatchDir(v.filter(!col("flagged")).drop("flagged"), s"$outDir/clean", id)
+      writeBatchDir(v.filter(col("flagged")).drop("flagged"), s"$outDir/flagged", id)
+    }
 
   /** Streaming blocklist screen over micro-batches of `(doc_id, text)`
     * rows — the ingest-time twin of the batch `blocklist_screen` report.
@@ -1829,13 +1542,8 @@ object Streams {
     * batch verdicts is exact.
     */
   def streamBlocklistScreen(df: DataFrame, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        blocklistScreenBatch(batch.toDF(), id, outDir)
-      }
-      .start()
+      : StreamingQuery =
+    eachBatch(df, checkpoint)(blocklistScreenBatch(_, _, outDir))
 
   /** Streaming quality gate over micro-batches of `(doc_id, text)` rows —
     * the ingestion-time twin of the batch `quality_gopher` query. Scoring
@@ -1843,13 +1551,8 @@ object Streams {
     * batch verdicts is exact.
     */
   def streamQualityGate(df: DataFrame, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        qualityGateBatch(batch.toDF(), id, outDir)
-      }
-      .start()
+      : StreamingQuery =
+    eachBatch(df, checkpoint)(qualityGateBatch(_, _, outDir))
 
   // ------------------------------------------- stream-stream as-of join
   /** Tagged union row for [[streamAsofJoin]]: `side` is "L" (probe) or

@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
 
 /** Bridge into Spark's `private[sql]` Column ↔ Expression conversions, so
   * graft's native Catalyst expressions (`graft.functions.FloatVecDot`, …)
@@ -32,32 +34,23 @@ object GraftBridge {
     o.getOrEmpty
 
   /** Bounded-wait read of one long metric off an [[Observation]] whose
-    * action (an eager localCheckpoint, typically) has already run: polls
-    * ~1 s for the async listener, then falls back to the caller's
+    * action (an eager localCheckpoint, typically) has already run: waits
+    * up to 1 s for the async listener, then falls back to the caller's
     * recompute so a missed metric degrades to the old extra job, never to
     * a wrong value. */
-  def observedLong(o: Observation, key: String)(fallback: => Long): Long = {
-    var polls = 0
-    var got = o.getOrEmpty
-    while (got.isEmpty && polls < 100) {
-      Thread.sleep(10); got = o.getOrEmpty; polls += 1
-    }
-    got.get(key).map(_.asInstanceOf[Long]).getOrElse(fallback)
-  }
+  def observedLong(o: Observation, key: String)(fallback: => Long): Long =
+    observedMap(o).get(key).map(_.asInstanceOf[Long]).getOrElse(fallback)
 
   /** Bounded-wait read of ALL metrics off an [[Observation]] whose action
     * (an eager localCheckpoint, typically) has already run — the
     * multi-metric sibling of [[observedLong]] for observations that mix
     * longs and collected sets. Returns the empty map if the listener
-    * never fires; callers fall back to a recompute. */
-  def observedMap(o: Observation): Map[String, Any] = {
-    var polls = 0
-    var got = o.getOrEmpty
-    while (got.isEmpty && polls < 100) {
-      Thread.sleep(10); got = o.getOrEmpty; polls += 1
-    }
-    got
-  }
+    * does not fire within 1 s; callers fall back to a recompute. */
+  def observedMap(o: Observation): Map[String, Any] =
+    try {
+      val row = Await.result(o.future, 1.second)
+      row.getValuesMap[Any](row.schema.map(_.name))
+    } catch { case _: TimeoutException => Map.empty }
 
   /** Unpersist the RDD behind a `localCheckpoint()`ed DataFrame. Iterative
     * algorithms (connected components) checkpoint each round; without this

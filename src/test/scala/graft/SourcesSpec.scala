@@ -343,6 +343,31 @@ class SourcesSpec extends AnyFunSuite {
       "post-reset batch 0 readmitted the old run's batch-0 duplicates")
   }
 
+  test("streamDedupIndexed: a restart on a fresh checkpoint still drops indexed fingerprints") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = Files.createTempDirectory("graft_dedup_stream").toString
+    val idx = s"$base/index"
+    // one query life: start on its own checkpoint, feed one batch, stop
+    def life(n: Int, docs: (Long, String)*): Set[Long] = {
+      val in = MemoryStream[(Long, String)]
+      val q = Streams.streamDedupIndexed(in.toDF().toDF("doc_id", "text"),
+        graft.functions.Portable.docFingerprint, col("doc_id"),
+        idx, s"$base/out$n", s"$base/ckpt$n")
+      try { in.addData(docs); q.processAllAvailable() } finally q.stop()
+      spark.read.parquet(s"$base/out$n").collect()
+        .map(_.getAs[Long]("doc_id")).toSet
+    }
+    try {
+      assert(life(1, (1L, "alpha beta"), (2L, "gamma delta")) == Set(1L, 2L))
+      // the fresh checkpoint restarts batch ids at 0; only a fresh run id
+      // keeps the redelivery exemption from waving through life 1's batch 0
+      assert(life(2, (3L, "Alpha  beta"), (4L, "epsilon zeta")) == Set(4L),
+        "a fingerprint indexed by the previous run was readmitted")
+    } finally SparkTestSession.deleteRecursively(base)
+  }
+
   test("streaming CDC upsert maintains a versioned snapshot idempotently") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -107,42 +107,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("late panes on transformWithState (RocksDB): same output as flatMapGroupsWithState") {
-    // Same scenario as the latePanes test, driven through the Spark 4
-    // StatefulProcessor API (multi-timer, typed ValueState handle). TWS
-    // requires the RocksDB state-store provider, so it runs on a session
-    // configured with it.
-    val s2 = SparkTestSession.rocksDbSession("graft-tws-test")
-    import s2.implicits._
-    implicit val ctx = s2.sqlContext
-    val in = MemoryStream[Msg]
-    val out = Streams.latePanesTws(in.toDS())
-    val q = out.writeStream.format("memory").queryName("panes_tws_out")
-      .outputMode("append").start()
-    try {
-      in.addData(Msg(ts("2024-01-01 10:00:05"), 1), Msg(ts("2024-01-01 10:00:15"), 1),
-        Msg(ts("2024-01-01 10:02:00"), 99))
-      q.processAllAvailable()
-      in.addData(Msg(ts("2024-01-01 10:02:01"), 99))
-      q.processAllAvailable()
-      in.addData(Msg(ts("2024-01-01 10:00:30"), 1))
-      q.processAllAvailable()
-      in.addData(Msg(ts("2024-01-01 10:03:30"), 99))
-      q.processAllAvailable()
-      in.addData(Msg(ts("2024-01-01 10:00:45"), 1))
-      q.processAllAvailable()
-      in.addData(Msg(ts("2024-01-01 10:03:31"), 99))
-      q.processAllAvailable()
-      val panes = s2.table("panes_tws_out").as[Pane].collect()
-        .filter(_.user_id == 1)
-        .map(p => (p.window_start.toString, p.cnt, p.pane)).toList.sorted
-      assert(panes == List(
-        ("2024-01-01 10:00:00.0", 1L, "LATE"),
-        ("2024-01-01 10:00:00.0", 2L, "ON_TIME")),
-        s"got $panes")
-    } finally q.stop()
-  }
-
   test("streaming top-k via transformWithState MapState: counts accumulate across batches") {
     val s2 = SparkTestSession.rocksDbSession("graft-topk-test")
     import s2.implicits._
