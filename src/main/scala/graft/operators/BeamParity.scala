@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,29 +28,22 @@ import org.apache.spark.sql.functions._
   */
 object BeamParity {
 
-  /** Demo1 batch twin: round-trip rows through the reference's JSON wire
-    * format `{"event_time": s, "user_id": n, "click": n}` and back, keeping
+  /** Demo1 batch twin: render rows in the reference's JSON wire format
+    * `{"event_time": s, "user_id": n, "click": n}` and run them through the
+    * streaming pipeline's own parse ([[Streams.demo1ParseEtl]]), keeping
     * only well-formed records.
     */
-  def demo1ParseEtl(spark: SparkSession, dir: String): DataFrame = {
-    val wire = Tables.events(spark, dir)
+  def demo1ParseEtl(spark: SparkSession, dir: String): DataFrame =
+    Streams.demo1ParseEtl(Tables.events(spark, dir)
       .select(to_json(struct(
         unix_timestamp(col("ts")).as("event_time"),
         col("user_id"),
-        (col("event_id") % 2).as("click"))).as("payload"))
-    wire
-      .select(from_json(col("payload"), Tables.wireSchema).as("m"))
-      // one-pass input audit; the CollectMetrics node also pins the parse:
-      // without it the pushed-down null filter re-evaluates from_json per
-      // referenced field (see malformedParsed)
-      .observe("etl_audit", count(lit(1)).as("n_input"))
-      .filter(col("m").isNotNull && col("m.event_time").isNotNull)
+        (col("event_id") % 2).as("click"))).as("payload")))
       .select(
-        col("m.event_time").as("event_time_s"),
-        col("m.user_id").cast("long").as("user_id"),
-        col("m.click").cast("long").as("click"))
+        unix_timestamp(col("event_time")).as("event_time_s"),
+        col("user_id").cast("long").as("user_id"),
+        col("click").cast("long").as("click"))
       .orderBy("event_time_s", "user_id", "click")
-  }
 
   val demo1ParseEtlSql: String =
     """SELECT CAST(floor(epoch(ts)) AS BIGINT) AS event_time_s,

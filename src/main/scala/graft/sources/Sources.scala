@@ -43,9 +43,18 @@ object Sources {
       .option("pathGlobFilter", glob).load(dir)
 
   // ------------------------------------------------------------- streaming
-  /** Unbounded file-directory source — the test/deploy stand-in for the
+  /** Unbounded raw-message source — the test/deploy stand-in for the
     * reference's Pub/Sub Lite read: files dropped into `dir` are consumed
-    * exactly once per checkpoint. */
+    * exactly once per checkpoint, and each line is one wire message,
+    * surfaced undecoded as the string column `payload` (the column
+    * `Streams.fromBusEnvelope` yields), so decoding happens once, in the
+    * pipeline's own parse. */
+  def wireStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.text(dir).withColumnRenamed("value", "payload")
+
+  /** Unbounded file-directory source of typed rows: files of `format`
+    * dropped into `dir` are decoded with `schema` and consumed exactly once
+    * per checkpoint. */
   def fileStream(spark: SparkSession, dir: String, schema: StructType,
       format: String = "json"): DataFrame =
     spark.readStream.schema(schema).format(format).load(dir)

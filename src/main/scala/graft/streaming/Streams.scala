@@ -29,12 +29,24 @@ import java.sql.Timestamp
 object Streams {
 
   /** Demo1 (`Demo1.java:52-72`): JSON payload → typed record with derived
-    * `processing_time`, malformed input dropped (from_json yields NULL),
-    * pipeline continues. Input needs a string column `payload`.
+    * `processing_time`, malformed input dropped (from_json yields NULL, or
+    * a record without `event_time`), pipeline continues. Input needs a
+    * string column `payload`.
+    *
+    * One parse per row: the `parse_audit` observation (input and malformed
+    * counts — the reference's per-failure log as metrics, published in every
+    * micro-batch's `observedMetrics`) sits between the parse and the filter,
+    * and its CollectMetrics node is the pushdown barrier. Without it,
+    * Catalyst rewrites the filter and projection in terms of
+    * `from_json(payload)` and the parse runs once per referenced field.
     */
   def demo1ParseEtl(messages: DataFrame): DataFrame =
     messages
       .select(from_json(col("payload"), Tables.wireSchema).as("m"))
+      .observe("parse_audit",
+        count(lit(1)).as("n_input"),
+        sum(when(col("m").isNull || col("m.event_time").isNull, 1L).otherwise(0L))
+          .as("n_malformed"))
       .filter(col("m").isNotNull && col("m.event_time").isNotNull)
       .select(
         timestamp_seconds(col("m.event_time")).as("event_time"),

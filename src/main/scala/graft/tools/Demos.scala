@@ -20,11 +20,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * parquet append.
   */
 object Demo1 {
-  def build(spark: SparkSession, inDir: String, outDir: String, ckpt: String): StreamingQuery = {
-    val wire = Sources.fileStream(spark, inDir, Tables.wireSchema)
-      .select(to_json(struct(col("event_time"), col("user_id"), col("click"))).as("payload"))
-    Streams.appendToParquet(Streams.demo1ParseEtl(wire), outDir, ckpt)
-  }
+  def build(spark: SparkSession, inDir: String, outDir: String, ckpt: String): StreamingQuery =
+    Streams.appendToParquet(Streams.demo1ParseEtl(Sources.wireStream(spark, inDir)),
+      outDir, ckpt)
 
   def main(args: Array[String]): Unit = Demos.run(args, build)
 }

@@ -6,7 +6,7 @@ import java.io.{File, PrintWriter}
   * for each user, `perUser` JSON wire messages 10 s apart in event time
   * ending at `endEpochS`, `click = 1` — the reference's only deterministic
   * fixture, reproduced as JSON-lines files consumable by
-  * `Sources.jsonLines` (batch) or `Sources.fileStream` (streaming).
+  * `Sources.jsonLines` (batch) or `Sources.wireStream` (streaming).
   */
 object Publisher {
 

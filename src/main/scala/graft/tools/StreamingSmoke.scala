@@ -49,8 +49,15 @@ object StreamingSmoke {
     val out1 = spark.read.parquet(s"$base/out1")
     val users = out1.select("user_id").distinct().collect()
       .map(_.getInt(0)).toSet
-    check("demo1_parse_etl", out1.count() == 60L && users == Set(1000, 1001, 1002),
-      s"rows=${out1.count()} users=$users")
+    // drop-and-log parity: the last batch that read input publishes its
+    // parse_audit counts, covering every row it committed
+    val audit = q1.recentProgress.filter(_.numInputRows > 0).lastOption.flatMap { p =>
+      Option(p.observedMetrics.get("parse_audit"))
+        .map(m => (p.numInputRows, m.getAs[Long]("n_input")))
+    }
+    check("demo1_parse_etl", out1.count() == 60L && users == Set(1000, 1001, 1002) &&
+      audit.exists { case (rows, nInput) => nInput >= rows },
+      s"rows=${out1.count()} users=$users last (committed, parse_audit.n_input)=$audit")
 
     // every window of the first publish is past the watermark after the
     // second → exactly the first 30 events appear in closed windows
