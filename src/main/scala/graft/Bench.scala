@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
+import graft.tools.Harness.num
 
 /** Benchmark main (driver contract): runs every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -153,12 +154,6 @@ object Bench {
   private def readColdFloors(sfBase: String): Map[String, Double] =
     readFloorsSection(sfBase, "cold_floors")
 
-  /** Locale-pinned decimal formatting — a comma-decimal default locale
-    * would otherwise emit invalid JSON that readFloors silently swallows,
-    * disabling the gate with no trace. */
-  private def num(fmt: String, v: Double): String =
-    String.format(java.util.Locale.ROOT, fmt, Double.box(v))
-
   /** The per-query regression gate, pure for the spec's sake: given the
     * PER-PASS warm times, the committed floors, and the interleaved probe
     * samples (one measured before pass 1, one between each pair of
@@ -308,7 +303,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // local-iteration subset (comma-separated names); the driver never sets
     // it, so the contract run always measures every query — and floor
     // updates are refused on a subset run below, so a partial measurement
@@ -319,15 +313,7 @@ object Bench {
         .filter(_.nonEmpty) // a blank env var means "all", not "none"
     val bench = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     val loadBefore = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NTZ fixture columns are interpreted in the session zone; pin UTC so
-      // bench sees the same instants as Verify/tests on any host (ADVICE r9)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // A failed query is reported as -1 sec and listed in `failed` — never
     // silently folded into a normal-looking wall time. The ordered seq is
     // kept alongside the map: the cold-band detector reads EXECUTION

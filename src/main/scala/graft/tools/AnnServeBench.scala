@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Minimal A/B instrument for the ANN serve join in isolation (r18):
@@ -16,34 +15,23 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.AnnServeBench <sfDir> <indexDir> [build]
   */
 object AnnServeBench {
-  private def time(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime(); val n = f
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
+  import Harness.time
 
   def main(args: Array[String]): Unit = {
     val sf = args(0)
     val idx = args(1)
     val build = args.length > 2 && args(2) == "build"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import graft.operators.Similarity
     graft.functions.VecFunctions.register(spark)
     val emb = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     if (build) {
-      val (tB, _) = time { Similarity.writeAnnIndex(spark, sf, idx); 0L }
+      val (tB, _) = time(Similarity.writeAnnIndex(spark, sf, idx))
       val cb = Similarity.codebookFromDir(spark, idx)
-      val (tA, _) = time {
+      val (tA, _) = time(
         Similarity.annIndexAppendBatch(emb.filter(col("vec_id") % 300 === 7),
-          cb, idx, 0L); 0L
-      }
+          cb, idx, 0L))
       println(f"[annservebench] built index at $idx in ${tB}%.2f s, append ${tA}%.2f s")
     }
     val probes = emb.filter(col("vec_id") % 100 === 0)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -39,20 +38,9 @@ object CurationSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val base = graft.operators.Scratch.tempParent("graft-curation-").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
-    var failed = false
-    def check(name: String, ok: Boolean, detail: String): Unit = {
-      println(s"[curation] $name: ${if (ok) "PASS" else "FAIL"} ($detail)")
-      if (!ok) failed = true
-    }
+    val check = new Harness.Checks("curation")
     def nDocs(dir: String): Long = Tables.documents(spark, dir).count()
     def nTokens(dir: String): Long = Tables.documents(spark, dir)
       .agg(sum(size(Portable.tokens(col("text"))))).collect()(0).getLong(0)
@@ -291,6 +279,6 @@ object CurationSmoke {
           s"${m6.params.getOrElse("compactions", "?")}, appended_gone=$appendedGone, " +
           s"reingested_copy_caught=$caught")
     } finally spark.stop() // scratch dir is removed by the Scratch hook
-    if (failed) sys.exit(1)
+    check.exitOnFailure()
   }
 }

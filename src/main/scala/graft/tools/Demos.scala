@@ -57,14 +57,7 @@ private[graft] object Demos {
     require(args.length >= 3,
       "usage: <inputDir|env:VAR> <outputDir|env:VAR> <checkpointDir|env:VAR> [--once]")
     val Array(inDir, outDir, ckpt) = args.take(3).map(resolve)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val q = build(spark, inDir, outDir, ckpt)
     if (args.contains("--once")) { q.processAllAvailable(); q.stop() }
     else q.awaitTermination()

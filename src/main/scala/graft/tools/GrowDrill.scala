@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Long-horizon drill for the grown-index trade (the incremental-index
@@ -24,40 +23,26 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.GrowDrill [nBatches] [families]
   */
 object GrowDrill {
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted; s(s.length / 2)
-  }
+  import Harness.{median, time}
 
   def main(args: Array[String]): Unit = {
     val nBatches = if (args.length > 0) args(0).toInt else 120
     val chosen = (if (args.length > 1) args(1).split(",").toSeq
       else Seq("edit", "ann")).toSet
     val sf = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
     val base = graft.operators.Scratch.tempParent("graft-growdrill").toString
-    var failed = false
+    val check = new Harness.Checks("growdrill")
 
     def report(name: String, times: Seq[Double], tPost: Double,
         foldOk: Boolean): Unit = {
       val d = times.length / 10
       val first = median(times.slice(2, 2 + math.max(d, 3))) // skip JIT batches
       val last = median(times.takeRight(math.max(d, 3)))
-      val ok = tPost <= 1.6 * first && foldOk
-      if (!ok) failed = true
-      println(f"[growdrill] $name: ${if (ok) "PASS" else "FAIL"} " +
-        f"(first=${first}%.3fs last=${last}%.3fs growth=${last / first}%.2fx " +
-        f"post_compact=${tPost}%.3fs restore=${tPost / first}%.2fx fold_ok=$foldOk)")
+      check(name, tPost <= 1.6 * first && foldOk,
+        f"first=${first}%.3fs last=${last}%.3fs growth=${last / first}%.2fx " +
+        f"post_compact=${tPost}%.3fs restore=${tPost / first}%.2fx fold_ok=$foldOk")
     }
 
     if (chosen("edit")) {
@@ -73,8 +58,8 @@ object GrowDrill {
         (id * 100 + j, n)
       }.toDF("key", "name")
       val times = (0L until nBatches.toLong).map { id =>
-        timed(graft.streaming.Streams.editScreenGrowSinkBatch(
-          batchDf(id), id, segs, dir, s"$base/editout"))
+        time(graft.streaming.Streams.editScreenGrowSinkBatch(
+          batchDf(id), id, segs, dir, s"$base/editout"))._1
       }
       // a probe equal to a batch-0 name must keep its grown verdict
       // through the fold
@@ -88,8 +73,8 @@ object GrowDrill {
       segs.unpersist()
       val compacted = graft.operators.TextAnalysis.editIndexSegments(spark, dir)
         .persist()
-      val tPost = timed(graft.streaming.Streams.editScreenGrowSinkBatch(
-        batchDf(nBatches + 1L), nBatches + 1L, compacted, dir, s"$base/editout"))
+      val tPost = time(graft.streaming.Streams.editScreenGrowSinkBatch(
+        batchDf(nBatches + 1L), nBatches + 1L, compacted, dir, s"$base/editout"))._1
       val after = graft.operators.TextAnalysis.editScreenBatch(probe,
         compacted.select("name_b", "blk_len", "blk_i", "seg"))
         .collect().head.getAs[Long]("n_matches")
@@ -107,8 +92,8 @@ object GrowDrill {
         (id * 100 + j + 1000000L, vec(s"gd_${id}_$j"))
       }.toDF("vec_id", "embedding")
       val times = (0L until nBatches.toLong).map { id =>
-        timed(graft.streaming.Streams.annIngestSinkBatch(
-          batchDf(id), id, codebook, dir, s"$base/annout"))
+        time(graft.streaming.Streams.annIngestSinkBatch(
+          batchDf(id), id, codebook, dir, s"$base/annout"))._1
       }
       // a near-copy of a batch-0 vector must keep its grown top-1
       // through the fold
@@ -120,8 +105,8 @@ object GrowDrill {
       val before = top1(graft.operators.Similarity.annScreenGrownBatch(
         probe, codebook, dir, excludeBatch = -1L))
       graft.operators.Similarity.compactAnnIndex(spark, dir)
-      val tPost = timed(graft.streaming.Streams.annIngestSinkBatch(
-        batchDf(nBatches + 1L), nBatches + 1L, codebook, dir, s"$base/annout"))
+      val tPost = time(graft.streaming.Streams.annIngestSinkBatch(
+        batchDf(nBatches + 1L), nBatches + 1L, codebook, dir, s"$base/annout"))._1
       val after = top1(graft.operators.Similarity.annFromIndex(spark, probe, dir))
       report("ann_ingest_grow", times, tPost,
         before == 1000000L && after == before)
@@ -129,21 +114,19 @@ object GrowDrill {
       // retrain stage: full rebuild with a fresh adaptive codebook — the
       // probe's ingested neighbor must survive the rebuild, the manifest
       // must audit it, and ingest keeps working under the new codebook
-      val tRetrain = timed(graft.operators.Similarity.retrainAnnIndex(spark, dir))
+      val tRetrain = time(graft.operators.Similarity.retrainAnnIndex(spark, dir))._1
       val codebook2 = graft.operators.Similarity.codebookFromDir(spark, dir)
       val afterRetrain = top1(graft.operators.Similarity.annFromIndex(spark, probe, dir))
-      val tPostRetrain = timed(graft.streaming.Streams.annIngestSinkBatch(
-        batchDf(nBatches + 2L), nBatches + 2L, codebook2, dir, s"$base/annout"))
+      val tPostRetrain = time(graft.streaming.Streams.annIngestSinkBatch(
+        batchDf(nBatches + 2L), nBatches + 2L, codebook2, dir, s"$base/annout"))._1
       val mr = graft.models.ModelManifest.validate(spark, dir, "ann_ivf_index")
-      val retrainOk = afterRetrain == before &&
-        mr.params.get("retrains").contains("1")
-      if (!retrainOk) failed = true
-      println(f"[growdrill] ann_retrain: ${if (retrainOk) "PASS" else "FAIL"} " +
-        f"(retrain=${tRetrain}%.3fs post_retrain_batch=${tPostRetrain}%.3fs " +
-        f"k=${codebook2.size} top1=$afterRetrain retrains=${mr.params.get("retrains")})")
+      check("ann_retrain",
+        afterRetrain == before && mr.params.get("retrains").contains("1"),
+        f"retrain=${tRetrain}%.3fs post_retrain_batch=${tPostRetrain}%.3fs " +
+        f"k=${codebook2.size} top1=$afterRetrain retrains=${mr.params.get("retrains")}")
     }
 
     spark.stop()
-    if (failed) sys.exit(1)
+    check.exitOnFailure()
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -45,46 +44,26 @@ import graft.operators.Similarity
   * Usage: runMain graft.tools.KneeDrill <rungsCsv> [root] [prune,serve]
   */
 object KneeDrill {
-  private def time(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime(); val n = f
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
-
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  import Harness.{hygiene, num, time}
 
   def main(args: Array[String]): Unit = {
     val rungs = args(0).split(",").map(_.trim.toLong).toSeq.sorted
     val root = if (args.length > 1) args(1) else "/tmp/fx/knee"
     val legs = (if (args.length > 2) args(2).split(",").toSeq
       else Seq("prune")).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val cap = Similarity.IvfMaxCells
     val knee = cap.toLong * cap / 2
     println(s"[knee] cap=$cap knee=n=${knee} rungs=${rungs.mkString(",")} legs=${legs.mkString(",")}")
 
-    def hygiene(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-
     val rows = rungs.map { n =>
       val dir = s"$root/n$n"
       if (!new java.io.File(s"$dir/embeddings.parquet").isDirectory) {
-        val (tGen, _) = time { VecGen.write(spark, n, dir); 0L }
+        val (tGen, _) = time(VecGen.write(spark, n, dir))
         println(f"[knee] generated n=$n in $tGen%.1f s")
       } else println(s"[knee] reusing $dir")
       val k = Similarity.ivfCells(n)
-      hygiene()
+      hygiene(spark)
       val tPrune = if (legs("prune")) {
         val fn = Similarity.queries("semdedup_prune")
         // SPARK_GRAFT_KNEE_WARM=train: warm ONLY the k-means codebook
@@ -110,9 +89,9 @@ object KneeDrill {
         t
       } else -1.0
       val (tBuild, tServe) = if (legs("serve")) {
-        hygiene()
+        hygiene(spark)
         val idx = graft.operators.Scratch.tempParent(s"graft-knee-$n").toString
-        val (tb, _) = time { Similarity.writeSemdedupIndex(spark, dir, idx); 0L }
+        val (tb, _) = time(Similarity.writeSemdedupIndex(spark, dir, idx))
         graft.functions.VecFunctions.register(spark)
         val probes = graft.Tables.embeddings(spark, dir)
           .select(col("vec_id"), col("embedding"))

@@ -1,9 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** Scale-slope drill at sf1 (VERDICT r10 item 3): measures the wall-time
   * growth of the most expensive operator families between sf0.1 and a
@@ -32,10 +29,7 @@ import graft.Tables
   * PLANS.md evidence, not in every `sbt test` loop.
   */
 object ScaleDrill {
-  private def time(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime(); val n = f
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
+  import Harness.{hygiene, num, time}
 
   /** Committed per-family scale floors (`slope_floors.json`) — the
     * scale-dimension twin of `bench_floors.json` (VERDICT r11 item 3):
@@ -116,35 +110,7 @@ object ScaleDrill {
   private def slopesPath: String =
     sys.env.getOrElse("SPARK_GRAFT_SLOPES", "slope_floors.json")
 
-  private def readSlopes(copies: Int): Map[String, (Double, Double)] =
-    try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = om.readTree(new java.io.File(slopesPath))
-      if (root.path("copies").asInt(-1) != copies) Map.empty
-      else {
-        val it = root.path("families").properties().iterator()
-        val b = Map.newBuilder[String, (Double, Double)]
-        while (it.hasNext) {
-          val e = it.next()
-          b += e.getKey -> ((e.getValue.path("t_big").asDouble(),
-            e.getValue.path("exponent").asDouble()))
-        }
-        b.result()
-      }
-    } catch { case _: Throwable => Map.empty }
-
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
-  private def writeSlopes(copies: Int,
-      merged: Map[String, (Double, Double)]): Unit = {
-    val body = merged.toSeq.sortBy(_._1)
-      .map { case (k, (tb, e)) =>
-        s"""    "$k": {"t_big": ${num(tb)}, "exponent": ${num(e)}}""" }
-      .mkString(",\n")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(slopesPath),
-      s"""{\n  "copies": $copies,\n  "families": {\n$body\n  }\n}\n""")
-  }
+  private[graft] val SlopeFloors = Harness.FloorsFile(("t_big", "exponent"))
 
   /** The drill regression gate, pure for the spec's sake (the bench
     * [[graft.Bench.gate]] pattern): given per-family results, committed
@@ -223,14 +189,7 @@ object ScaleDrill {
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val copies = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // SPARK_GRAFT_DRILL_FIXTURE reuses a pre-generated ×copies corpus
     // (persisted by a prior `SfGen <base> <copies> <dir>` run) so iterative
     // single-family drills and the round-closing oracle sweep share one
@@ -246,13 +205,11 @@ object ScaleDrill {
         // full-table generation (SfGen) so part-keyed families can drill
         // too; documents/embeddings/events use the identical construction
         // the original drill-local upsample had
-        val (genT, _) = time { SfGen.upsampleAll(spark, base, copies, dir); 0L }
+        val (genT, _) = time(SfGen.upsampleAll(spark, base, copies, dir))
         println(f"[drill] generated in $genT%.1f s")
         dir
     }
 
-    import graft.operators.{Dedup, Similarity, TextAnalysis}
-    import graft.operators.TemporalJoins
     // Order is a SPILL-SAFETY contract (VERDICT r16 item 2): the
     // exact-verify lexical pair (`dedup_ngram_jaccard`,
     // `dedup_containment`) is shuffle-spill-bound at the far decade —
@@ -266,30 +223,12 @@ object ScaleDrill {
       "quality_classifier", "dedup_clusters", "ann_grow_serve",
       "text_edit_distance", "semdedup_prune",
       "dedup_containment", "dedup_ngram_jaccard")
-    val all = TextAnalysis.queries ++ Dedup.queries ++
-      Similarity.queries ++ TemporalJoins.queries ++
-      graft.operators.Scoring.queries ++
-      graft.operators.DataQuality.queries ++
-      graft.operators.Relational.queries
+    val all = graft.SparkEntry.queries
     val chosen = if (args.length > 2) args(2).split(",").toSeq else defaults
     val families: Seq[(String, (SparkSession, String) => DataFrame)] =
       chosen.map(n => n -> all(n))
     val probeFn = all(ProbeFamily)
 
-    def hygiene(): Unit = {
-      // between-family hygiene: a long-lived drill JVM accumulates pinned
-      // localCheckpoint blocks and cached relations from every previous
-      // family, and the round-12 adjudication measured 2-5× inflation on
-      // later families from exactly this (steady-state re-profiles in a
-      // fresh JVM sat at 1.0-2.7× their floors while the in-drill samples
-      // flagged at 5×). Cross-family state that must survive lives on
-      // disk (indexes) or in driver maps (codebooks), never in Spark
-      // blocks, so dropping them between families is safe by design.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
     // min-of-3 probe point at the BIG fixture — the scale the gate's
     // floors are committed at. Run after hygiene so it measures the host,
     // not the previous family's leftover block pressure.
@@ -302,13 +241,13 @@ object ScaleDrill {
     }
 
     println(f"[drill] ${"family"}%-22s ${"t_base"}%9s ${"t_x" + copies}%9s ${"ratio"}%7s ${"exponent"}%8s rows")
-    hygiene()
+    hygiene(spark)
     probeFn(spark, big).count() // probe warm-up (codegen, footer reads)
     val probePoints = IndexedSeq.newBuilder[Double]
     probePoints += probePoint()
     val failed = Seq.newBuilder[String]
     val rows = families.map { case (name, fn) =>
-      hygiene()
+      hygiene(spark)
       // fault isolation (VERDICT r16 item 2): one family's failure —
       // OOM-as-exception, a bad plan, a missing column on an exotic
       // fixture — records t = -1 and the CHAIN CONTINUES; only a hard JVM
@@ -328,7 +267,7 @@ object ScaleDrill {
         failed += name
         (name, -1.0, -1.0, -1.0, -1.0)
       }
-      hygiene()
+      hygiene(spark)
       probePoints += probePoint()
       r
     }
@@ -338,7 +277,7 @@ object ScaleDrill {
     println(f"[drill] worst exponent: ${worst._1} ${worst._5}%.2f")
     println(s"[drill] probe ($ProbeFamily) samples: ${probeSamples.map(num).mkString(", ")}")
     // ---- scale regression gate vs committed x-N-end time floors ----
-    val floors = readSlopes(copies)
+    val floors = SlopeFloors.read(slopesPath, copies)
     val (corrections, probeRegression, red, warn) =
       gate(rows.map(r => (r._1, r._3, r._5)), floors, probeSamples)
     val ceilHits = rows.collect {
@@ -348,7 +287,7 @@ object ScaleDrill {
     val regressions = red ++ ceilHits
     if (sys.env.get("SPARK_GRAFT_UPDATE_SLOPES").contains("1") && args.length <= 2) {
       // never merge a subset run's numbers over the committed defaults,
-      // and never mix copies factors (readSlopes already refused those).
+      // and never mix copies factors (SlopeFloors.read already refused those).
       // The probe's best bracket sample ratchets its own family row (its
       // committed t_big IS the probe floor), keeping the instrument
       // calibrated on the same idle-host runs that set every other floor.
@@ -365,7 +304,7 @@ object ScaleDrill {
           case cs => Some(k -> cs.minBy(_._1)) // run with the best t_big wins
         }
       }.toMap
-      writeSlopes(copies, merged)
+      SlopeFloors.write(slopesPath, copies, merged)
       System.err.println(s"[drill] slope floors updated at $slopesPath (${merged.size} families)")
     }
     val expJson = rows.sortBy(_._1)

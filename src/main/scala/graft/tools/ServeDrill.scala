@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Far-decade SERVE-path drill (VERDICT r14 item 7): the winnow and
@@ -32,66 +31,28 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.ServeDrill <bigFixtureDir> [copies] [families]
   */
 object ServeDrill {
-  private val ServeBigFactor = 4.0
+  import Harness.{num, time}
 
-  private def time(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime(); val n = f
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
+  private val ServeBigFactor = 4.0
 
   private def floorsPath: String =
     sys.env.getOrElse("SPARK_GRAFT_SERVE_FLOORS", "serve_floors.json")
 
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
-  private def readFloors(copies: Int): Map[String, (Double, Double)] =
-    try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = om.readTree(new java.io.File(floorsPath))
-      if (root.path("copies").asInt(-1) != copies) Map.empty
-      else {
-        val it = root.path("families").properties().iterator()
-        val b = Map.newBuilder[String, (Double, Double)]
-        while (it.hasNext) {
-          val e = it.next()
-          b += e.getKey -> ((e.getValue.path("t_build").asDouble(),
-            e.getValue.path("t_serve").asDouble()))
-        }
-        b.result()
-      }
-    } catch { case _: Throwable => Map.empty }
-
-  private def writeFloors(copies: Int,
-      merged: Map[String, (Double, Double)]): Unit = {
-    val body = merged.toSeq.sortBy(_._1)
-      .map { case (k, (tb, ts)) =>
-        s"""    "$k": {"t_build": ${num(tb)}, "t_serve": ${num(ts)}}""" }
-      .mkString(",\n")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(floorsPath),
-      s"""{\n  "copies": $copies,\n  "families": {\n$body\n  }\n}\n""")
-  }
+  private[graft] val ServeFloors = Harness.FloorsFile(("t_build", "t_serve"))
 
   def main(args: Array[String]): Unit = {
     val big = args(0)
     val copies = if (args.length > 1) args(1).toInt else 300
     val chosen = (if (args.length > 2) args(2).split(",").toSeq
       else Seq("winnow_serve", "semdedup_serve")).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import graft.operators.{Dedup, Similarity}
 
     val rows = Seq.newBuilder[(String, Double, Double, Long)]
 
     if (chosen("winnow_serve")) {
       val idx = graft.operators.Scratch.tempParent("graft-servedrill-w").toString
-      val (tBuild, _) = time { Dedup.writeWinnowIndex(spark, big, idx); 0L }
+      val (tBuild, _) = time(Dedup.writeWinnowIndex(spark, big, idx))
       val batch = graft.Tables.documents(spark, big)
         .select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 100 === 0)
@@ -105,7 +66,7 @@ object ServeDrill {
 
     if (chosen("semdedup_serve")) {
       val idx = graft.operators.Scratch.tempParent("graft-servedrill-s").toString
-      val (tBuild, _) = time { Similarity.writeSemdedupIndex(spark, big, idx); 0L }
+      val (tBuild, _) = time(Similarity.writeSemdedupIndex(spark, big, idx))
       graft.functions.VecFunctions.register(spark)
       val probes = graft.Tables.embeddings(spark, big)
         .select(col("vec_id"), col("embedding"))
@@ -129,15 +90,14 @@ object ServeDrill {
       // batch-latest dedup (`serveCellsLatest`), the two paths whose
       // rank windows the r18 bounded top-k fold replaced.
       val idx = graft.operators.Scratch.tempParent("graft-servedrill-a").toString
-      val (tBuild, _) = time { Similarity.writeAnnIndex(spark, big, idx); 0L }
+      val (tBuild, _) = time(Similarity.writeAnnIndex(spark, big, idx))
       graft.functions.VecFunctions.register(spark)
       val emb = graft.Tables.embeddings(spark, big)
         .select(col("vec_id"), col("embedding"))
       val codebook = Similarity.codebookFromDir(spark, idx)
-      val (tAppend, _) = time {
+      val (tAppend, _) = time(
         Similarity.annIndexAppendBatch(emb.filter(col("vec_id") % 300 === 7),
-          codebook, idx, 0L); 0L
-      }
+          codebook, idx, 0L))
       val probes = emb.filter(col("vec_id") % 100 === 0)
       def serveBase(): Long =
         Similarity.annFromIndex(spark, probes, idx).count()
@@ -153,7 +113,7 @@ object ServeDrill {
     }
 
     val got = rows.result()
-    val floors = readFloors(copies)
+    val floors = ServeFloors.read(floorsPath, copies)
     val regressions = got.flatMap { case (name, _, tServe, _) =>
       floors.get(name)
         .filter { case (_, fs) => fs > 0 && tServe > ServeBigFactor * fs }
@@ -171,7 +131,7 @@ object ServeDrill {
           case cs => Some(k -> ((cs.map(_._1).min, cs.map(_._2).min)))
         }
       }.toMap
-      writeFloors(copies, merged)
+      ServeFloors.write(floorsPath, copies, merged)
       System.err.println(s"[servedrill] serve floors updated at $floorsPath")
     }
     val body = got.map { case (n, tb, ts, cnt) =>

@@ -108,17 +108,9 @@ object SfGen {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val copies = if (args.length > 1) args(1).toInt else 10
     val out = if (args.length > 2) args(2) else s"/tmp/graft-sf-x$copies"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t0 = System.nanoTime()
-    upsampleAll(spark, base, copies, out)
-    println(f"[sfgen] x$copies corpus at $out in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val spark = Harness.session()
+    val (t, _) = Harness.time(upsampleAll(spark, base, copies, out))
+    println(f"[sfgen] x$copies corpus at $out in $t%.1f s")
     spark.stop()
   }
 }

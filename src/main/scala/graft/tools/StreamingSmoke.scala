@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.io.File
 import java.nio.file.Files
@@ -21,14 +20,7 @@ object StreamingSmoke {
     val in = s"$base/in"
     new File(in).mkdirs()
     val endA = 1700000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // 3 users × 10 messages, 10 s apart, ending at endA; the second file is
     // 10 minutes later, far past the 2-minute watermark horizon
@@ -40,11 +32,7 @@ object StreamingSmoke {
     q1.processAllAvailable(); q2.processAllAvailable()
     q1.stop(); q2.stop()
 
-    var failed = false
-    def check(name: String, ok: Boolean, detail: String): Unit = {
-      println(s"[smoke] $name: ${if (ok) "PASS" else "FAIL"} ($detail)")
-      if (!ok) failed = true
-    }
+    val check = new Harness.Checks("smoke")
 
     val out1 = spark.read.parquet(s"$base/out1")
     val users = out1.select("user_id").distinct().collect()
@@ -319,6 +307,6 @@ object StreamingSmoke {
     }
 
     spark.stop()
-    if (failed) sys.exit(1)
+    check.exitOnFailure()
   }
 }

@@ -53,17 +53,9 @@ object VecGen {
   def main(args: Array[String]): Unit = {
     val n = args(0).toLong
     val out = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t0 = System.nanoTime()
-    write(spark, n, out)
-    println(f"[vecgen] $n vectors at $out in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val spark = Harness.session()
+    val (t, _) = Harness.time(write(spark, n, out))
+    println(f"[vecgen] $n vectors at $out in $t%.1f s")
     spark.stop()
   }
 }

@@ -52,6 +52,13 @@ object GraftBridge {
       row.getValuesMap[Any](row.schema.map(_.name))
     } catch { case _: TimeoutException => Map.empty }
 
+  /** Block until every listener-bus event posted so far has been
+    * delivered (the bus is asynchronous, so an action can return before
+    * its task and job events reach a listener). Throws
+    * `java.util.concurrent.TimeoutException` after `timeoutMs`. */
+  def drainListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+
   /** Unpersist the RDD behind a `localCheckpoint()`ed DataFrame. Iterative
     * algorithms (connected components) checkpoint each round; without this
     * the superseded rounds' blocks stay pinned until the session ends.

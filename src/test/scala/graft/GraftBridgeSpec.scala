@@ -21,4 +21,30 @@ class GraftBridgeSpec extends AnyFunSuite {
     assert(waitedS < 2.5, f"fallback took $waitedS%.2f s")
     assert(GraftBridge.observedMap(Observation("never_ran_map")).isEmpty)
   }
+
+  test("drainListenerBus: a task-end listener has seen every task of the action once it returns") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val group = "graft-drain-probe"
+    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger(0)
+    val lis = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(stageIds.add(_))
+      // slow delivery: without the drain the count is still short
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        Thread.sleep(50)
+        if (stageIds.contains(e.stageId)) ended.incrementAndGet()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(lis)
+    try {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(1 to 1000, 7).foreach(_ => ())
+      finally sc.clearJobGroup()
+      GraftBridge.drainListenerBus(spark, 10000L)
+      assert(ended.get == 7)
+    } finally sc.removeSparkListener(lis)
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import scala.collection.mutable.ArrayBuffer
 
 /** Per-task shuffle-read record counts of the heaviest stage of a job —
@@ -23,14 +23,7 @@ object TaskMetricsProbe {
     spark.sparkContext.addSparkListener(lis)
     try {
       run
-      // the listener bus is async; wait until the event stream goes quiet
-      val deadline = System.nanoTime() + 5000000000L
-      var last = -1
-      var cur = events.synchronized(events.size)
-      while (System.nanoTime() < deadline && (cur != last || cur == 0)) {
-        last = cur; Thread.sleep(200)
-        cur = events.synchronized(events.size)
-      }
+      GraftBridge.drainListenerBus(spark, 10000L)
     } finally spark.sparkContext.removeSparkListener(lis)
     val byStage = events.synchronized(events.toList).groupBy(_._1)
     byStage.maxBy(_._2.map(_._2).sum)._2.map(_._2)
