@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState,
   GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode,
   TimerValues, TTLConfig}
 import java.sql.Timestamp
@@ -25,6 +25,15 @@ import java.sql.Timestamp
   * end-to-end exactly-once output (the reference's retry-surviving append,
   * `Demo1.java:96-97`). Sinks that also READ their own earlier output
   * (the grow variants) exclude their own batch id on the read side.
+  *
+  * Checkpoints: `appendToParquet` and `eachBatch` start through `start`,
+  * which makes [[LocalCheckpointFs]] the session's `file:` FileContext
+  * unless the session or its Hadoop conf names one. The offset log, commit
+  * log, source and sink logs and the state store all build their
+  * checkpoint file manager from the query's session Hadoop conf, which
+  * `start()` clones, so the setting must be in place before it. Hadoop's
+  * stock `LocalFs` forks a `readlink` or `chmod` process for each
+  * checkpoint rename and create on a host without `libhadoop.so`.
   */
 object Streams {
 
@@ -590,28 +599,41 @@ object Streams {
   // exercised in StreamingSpec; `latePanes` covers the reference's
   // *discarding* variant.
 
-  /** Streaming sink parity (O11): at-least-once append achieved with
-    * checkpointing + an append-mode file sink; `foreachBatch` variant for
-    * idempotent (batch-id keyed) writes. Returns the started query.
+  /** Streaming sink parity (O11): exactly-once append. The checkpoint
+    * replays a failed batch, and the file sink's `_spark_metadata` log lists
+    * only committed batches' files, so readers of `path` see each batch once
+    * (`foreachBatch` variants get the same from batch-id keyed writes).
+    * Returns the started query.
     */
   def appendToParquet(df: DataFrame, path: String, checkpoint: String)
       : StreamingQuery =
-    df.writeStream
+    start(df.sparkSession, df.writeStream
       .outputMode("append")
       .format("parquet")
       .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .start()
+      .option("checkpointLocation", checkpoint))
+
+  /** `w.start()` with [[LocalCheckpointFs]] as the `file:` FileContext of
+    * `spark`, the query's session, unless its conf or Hadoop conf already
+    * sets `fs.AbstractFileSystem.file.impl` (Hadoop's own default does not
+    * count). */
+  private def start(spark: SparkSession, w: DataStreamWriter[Row]): StreamingQuery = {
+    val key = "fs.AbstractFileSystem.file.impl"
+    val userSet = spark.conf.getOption(key).isDefined ||
+      Option(spark.sparkContext.hadoopConfiguration.getPropertySources(key))
+        .exists(_.exists(_ != "core-default.xml"))
+    if (!userSet) spark.conf.set(key, classOf[LocalCheckpointFs].getName)
+    w.start()
+  }
 
   // ------------------------------------------------- micro-batch sink seam
   /** Start `df` running `sink` on every micro-batch with its batch id: the
     * one `foreachBatch` wiring the streaming twins share. */
   private def eachBatch(df: DataFrame, checkpoint: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    df.writeStream
+    start(df.sparkSession, df.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) => sink(batch, id) }
-      .start()
+      .foreachBatch { (batch: DataFrame, id: Long) => sink(batch, id) })
 
   /** Byte-replace `dir/batch_id=<id>` with `df`, optionally nested
     * `partitionBy` directories inside it. Readers get `batch_id` back via
