@@ -65,63 +65,41 @@ object Similarity {
     // so the qid exchange carries O(panel × k × partitions) rows instead
     // of the full O(panel × corpus) stream it used to shuffle AND sort.
     // Rank equivalence (incl. ±0.0/NaN double semantics) is the
-    // [[graft.functions.CosineTopKAggregator]] contract, pinned by
-    // TopKAggProps against this very window form.
+    // [[graft.functions.BoundedTopK]] contract, pinned by TopKAggProps
+    // against this very window form.
     q.join(e.select(col("vec_id"), col("embedding")), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         round(cosine(col("qemb"), col("embedding")), 4).as("cosine"))
       .transform(topkByQid(k))
+      .select("qid", "rank", "vec_id", "cosine")
   }
 
-  /** The shared window→aggregate top-k fold: (qid, vec_id, cosine) in,
-    * (qid, carry..., rank, vec_id, cosine) out, rank = position in the
-    * (cosine desc, vec_id asc) order — byte-identical to
-    * `row_number().over(...)` ≤ k (the aggregator's scaladoc carries the
-    * double-ordering proof obligations). `carry` names columns that are
-    * CONSTANT within a qid group (e.g. the LSH probe's bucket — a join
-    * key) and ride along as `min(c)`, which equals that constant. */
-  private[graft] def topkByQid(k: Int, carry: Seq[String] = Nil)(
+  /** The (cosine desc, vec_id asc) order of every cosine rank. */
+  private[graft] val ByCosine: Seq[Column] = Seq(col("cosine").desc, col("vec_id").asc)
+  /** The (adc asc, vec_id asc) order of every ADC-distance rank. */
+  private[graft] val ByAdc: Seq[Column] = Seq(col("adc").asc, col("vec_id").asc)
+
+  /** The shared window→aggregate top-k fold: `row_number().over(
+    * partitionBy(qid).orderBy(order: _*)) <= k` as one
+    * [[graft.functions.BoundedTopK]] per qid. Out come (qid, carry...,
+    * rank, <order keys>..., carried...): `carried` columns ride their own
+    * row (a per-candidate cell); `carry` columns are CONSTANT within a qid
+    * group (the LSH probe's bucket, a join key) and ride as `min(c)`,
+    * which equals that constant. */
+  private[graft] def topkByQid(k: Int, order: Seq[Column] = ByCosine,
+      carried: Seq[String] = Nil, carry: Seq[String] = Nil)(
       scored: DataFrame): DataFrame = {
-    val tk = udaf(new graft.functions.CosineTopKAggregator(k),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong))
-    val aggs = tk(col("cosine"), col("vec_id")).as("tk") +:
+    val names = scored.select(order.map(org.apache.spark.sql.GraftBridge.sortKey(_)._1): _*)
+      .columns ++ carried
+    val aggs = graft.functions.BoundedTopK.topK(k, order, carried.map(col)).as("tk") +:
       carry.map(c => min(col(c)).as(c))
     scored.groupBy("qid")
       .agg(aggs.head, aggs.tail: _*)
       .select(col("qid") +: carry.map(col) :+
         posexplode(col("tk")).as(Seq("pos", "s")): _*)
-      .select(col("qid") +: carry.map(col) :+
-        (col("pos") + 1).cast("int").as("rank") :+
-        col("s._2").as("vec_id") :+ col("s._1").as("cosine"): _*)
-  }
-
-  /** Payload-carrying, direction-parameterized sibling of [[topkByQid]]
-    * (r18): `(qid, vec_id, <score>, <payload:long>)` in,
-    * `(qid, rank, vec_id, <score>, <payload>)` out — byte-identical to
-    * `row_number().over(partitionBy(qid).orderBy(score asc|desc,
-    * vec_id asc)) <= k` with the payload riding its row (the
-    * [[graft.functions.PayloadTopKAggregator]] ordering contract:
-    * nanSafe double semantics in both directions, ids distinct per
-    * group). `asc = true` serves the ADC distance ranks, `asc = false`
-    * the cosine ranks whose per-candidate `cell` cannot ride as a
-    * group-constant carry. */
-  private[graft] def topkPayload(k: Int, asc: Boolean, score: String,
-      payload: String)(scored: DataFrame): DataFrame = {
-    val tk = udaf(new graft.functions.PayloadTopKAggregator(k, asc),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong))
-    scored.groupBy("qid")
-      .agg(tk(col(score), col("vec_id"), col(payload)).as("tk"))
-      .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "s")))
-      .select(col("qid"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("s._2").as("vec_id"),
-        col("s._1").as(score),
-        col("s._3").as(payload))
+      .select((col("qid") +: carry.map(col)) ++
+        ((col("pos") + 1).cast("int").as("rank") +:
+          names.zipWithIndex.map { case (n, i) => col(s"s._${i + 1}").as(n) }): _*)
   }
 
   val annBruteforceTopkSql: String =
@@ -196,7 +174,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("bucket"), col("vec_id"),
         round(cosine(col("qemb"), col("embedding")), 4).as("cosine"))
-      .transform(topkByQid(3, Seq("bucket")))
+      .transform(topkByQid(3, carry = Seq("bucket")))
       .select("qid", "bucket", "rank", "vec_id", "cosine")
       .orderBy("qid", "rank")
   }
@@ -979,20 +957,17 @@ object Similarity {
     // per qid; the aggregate reduces each partition to <= 3 rows per
     // probe map-side. `cell` is per-candidate (each corpus vector lives
     // in one cell), so it rides as the aggregate's payload; ranking
-    // equivalence is the [[graft.functions.PayloadTopKAggregator]]
-    // contract, pinned by PayloadTopKAggProps against this very window
-    // form. Candidate (qid, vec_id) pairs are distinct by construction:
-    // a corpus vector joins through exactly one cell row.
-    val joined = q.join(corpus, Seq("cell"))
+    // equivalence is the [[graft.functions.BoundedTopK]] contract, pinned
+    // by PayloadTopKAggProps against this very window form. Candidate
+    // (qid, vec_id) pairs are distinct by construction: a corpus vector
+    // joins through exactly one cell row.
+    q.join(corpus, Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
-    val cellType = joined.schema("cell").dataType
-    joined
       .select(col("qid"), col("vec_id"),
         round(expr("vec_dot(qemb, embedding)") / (col("qnrm") * col("nrm")), 4).as("cosine"),
-        col("cell").cast("long").as("cellp"))
-      .transform(topkPayload(3, asc = false, "cosine", "cellp"))
-      .select(col("qid"), col("cellp").cast(cellType).as("cell"),
-        col("rank"), col("vec_id"), col("cosine"))
+        col("cell"))
+      .transform(topkByQid(3, carried = Seq("cell")))
+      .select("qid", "cell", "rank", "vec_id", "cosine")
       .orderBy("qid", "rank")
   }
 
@@ -1267,21 +1242,18 @@ object Similarity {
     // payloads — the stale-row cosines this pre-computes are the rare
     // re-ingest duplicates). The rank <= 3 then folds exactly as
     // [[serveCells]] does.
-    val joined = q.join(corpus, Seq("cell"))
+    q.join(corpus, Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
-    val cellType = joined.schema("cell").dataType
-    joined
       .select(col("qid"), col("vec_id"), col("batch_id"),
         round(expr("vec_dot(qemb, embedding)") / (col("qnrm") * col("nrm")), 4)
           .as("cosine"),
-        col("cell").cast("long").as("cellp"))
+        col("cell"))
       .groupBy("qid", "vec_id")
-      .agg(max(struct(col("batch_id"), col("cosine"), col("cellp"))).as("m"))
+      .agg(max(struct(col("batch_id"), col("cosine"), col("cell"))).as("m"))
       .select(col("qid"), col("vec_id"),
-        col("m.cosine").as("cosine"), col("m.cellp").as("cellp"))
-      .transform(topkPayload(3, asc = false, "cosine", "cellp"))
-      .select(col("qid"), col("cellp").cast(cellType).as("cell"),
-        col("rank"), col("vec_id"), col("cosine"))
+        col("m.cosine").as("cosine"), col("m.cell").as("cell"))
+      .transform(topkByQid(3, carried = Seq("cell")))
+      .select("qid", "cell", "rank", "vec_id", "cosine")
       .orderBy("qid", "rank")
   }
 
@@ -1470,6 +1442,7 @@ object Similarity {
       .select(col("qid"), col("vec_id"),
         round(cosine(col("qemb"), col("embedding")), 4).as("cosine"))
       .transform(topkByQid(3))
+      .select("qid", "rank", "vec_id", "cosine")
       // array-free (the semdedup checkpoint rule) and read FOUR times —
       // both serve-side semi joins, the nq aggregate, and the output
       // crossJoin; without this the brute-force probe×corpus truth pass
@@ -2029,11 +2002,10 @@ object Similarity {
     // (the plan's Sort under WindowGroupLimit) — the aggregate replaces
     // that sort with one comparison against the running 3rd-best per row.
     // Ascending-distance rank equivalence (NaN last under asc, ±0.0 ties
-    // to vec_id) is the PayloadTopKAggregator contract.
+    // to vec_id) is the BoundedTopK contract.
     queries.join(codes, col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), round(adc, 4).as("adc"),
-        lit(0L).as("nopay"))
-      .transform(topkPayload(3, asc = true, "adc", "nopay"))
+      .select(col("qid"), col("vec_id"), round(adc, 4).as("adc"))
+      .transform(topkByQid(3, ByAdc))
       .select("qid", "rank", "vec_id", "adc")
       .orderBy("qid", "rank")
   }
@@ -2116,9 +2088,8 @@ object Similarity {
     // <= poolN rows per probe map-side; the final rerank rank is
     // pool-bounded and reuses the shared [[topkByQid]] fold.
     val pool = q.join(codes, col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), round(adc, 4).as("adc"),
-        lit(0L).as("nopay"))
-      .transform(topkPayload(poolN, asc = true, "adc", "nopay"))
+      .select(col("qid"), col("vec_id"), round(adc, 4).as("adc"))
+      .transform(topkByQid(poolN, ByAdc))
       .select("qid", "vec_id")
     pool
       .join(broadcast(queries), Seq("qid"))
@@ -2246,15 +2217,11 @@ object Similarity {
     // (r18): same sort-elimination as [[pqAdcTopk]], same payload
     // rationale as [[serveCells]] — candidates are the probe's own cell,
     // so (qid, vec_id) is unique and the cell rides the aggregate.
-    val joined = q.join(corpus, Seq("cell"))
+    q.join(corpus, Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
-    val cellType = joined.schema("cell").dataType
-    joined
-      .select(col("qid"), col("vec_id"), round(adc, 4).as("adc"),
-        col("cell").cast("long").as("cellp"))
-      .transform(topkPayload(3, asc = true, "adc", "cellp"))
-      .select(col("qid"), col("cellp").cast(cellType).as("cell"),
-        col("rank"), col("vec_id"), col("adc"))
+      .select(col("qid"), col("vec_id"), round(adc, 4).as("adc"), col("cell"))
+      .transform(topkByQid(3, ByAdc, carried = Seq("cell")))
+      .select("qid", "cell", "rank", "vec_id", "adc")
       .orderBy("qid", "rank")
   }
 
@@ -2766,7 +2733,7 @@ object Similarity {
     // rather than the pairs against themselves; the collect fallback
     // keeps it correct if the async metric never lands.
     val droppedProbeIds =
-      org.apache.spark.sql.GraftBridge.observationGetOrEmpty(docObs)
+      org.apache.spark.sql.GraftBridge.observedMap(docObs)
         .get("dropped_probes")
         .map(_.asInstanceOf[Seq[Long]].toSet)
         .getOrElse(flags.filter(col("dropped"))

@@ -1339,12 +1339,11 @@ object TextAnalysis {
     * Shape at scale (r18): one tokenize+shingle pass, one (source,
     * bigram) partial-aggregated exchange, then ONE source-keyed aggregate
     * that computes the source's bigram mass AND its top-3 in the same
-    * pass — [[graft.functions.CountTopKAggregator]], the bounded
-    * (cnt desc, bg asc) top-k whose UTF-8-byte tie-break replicates the
-    * string SortOrder of the `row_number` window it replaced. The former
-    * `counts → window` + `counts → sum → join` pair planned the
-    * tokenize+shingle+count subtree TWICE (no exchange reuse across the
-    * differing parents) and paid a partition-local sort under the
+    * pass — [[graft.functions.BoundedTopK]] on (cnt desc, bg asc), the
+    * `row_number` window's own SortOrder, UTF-8-byte tie-break included.
+    * The former `counts → window` + `counts → sum → join` pair planned
+    * the tokenize+shingle+count subtree TWICE (no exchange reuse across
+    * the differing parents) and paid a partition-local sort under the
     * WindowGroupLimit; both are gone.
     */
   def ngramTopPerSource(s: SparkSession, d: String): DataFrame = {
@@ -1354,12 +1353,9 @@ object TextAnalysis {
       .select(col("source"),
         explode(Portable.shingles(Portable.tokens(col("text")), 2)).as("bg"))
       .groupBy("source", "bg").agg(count(lit(1)).as("cnt"))
-    val tk = udaf(new graft.functions.CountTopKAggregator(3),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.STRING))
     counts.groupBy("source")
-      .agg(sum("cnt").as("tot"), tk(col("cnt"), col("bg")).as("tk"))
+      .agg(sum("cnt").as("tot"),
+        graft.functions.BoundedTopK.topK(3, Seq(col("cnt").desc, col("bg").asc)).as("tk"))
       .select(col("source"), col("tot"), posexplode(col("tk")).as(Seq("pos", "s")))
       .select(col("source"), (col("pos") + 1).cast("int").as("rank"),
         col("s._2").as("bg"), col("s._1").as("cnt"),

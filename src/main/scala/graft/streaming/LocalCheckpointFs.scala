@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import java.net.URI
@@ -26,13 +26,20 @@ import scala.jdk.CollectionConverters._
   *
   * Everything else is `LocalFs`: the same `.crc` files, written and
   * checked as `LocalFs` does, FileContext's no-clobber rename check, and
-  * symlinks resolved by Hadoop's own code. [[Streams]] installs it before
+  * symlinks resolved by Hadoop's own code. One difference: the
+  * one-argument `open(Path)`, which Spark's checkpoint manager calls,
+  * verifies the `.crc` too. Hadoop's `FilterFs.open(Path)` hands it to the
+  * raw filesystem past `ChecksumFs`, so under `LocalFs` a corrupted
+  * offset, commit or source log file is read as is. [[Streams]] installs it before
   * a query starts; Hadoop constructs it reflectively through the
   * `(URI, Configuration)` constructor, and like `LocalFs` it ignores the
   * URI.
   */
 class LocalCheckpointFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new LocalCheckpointFs.Raw(conf))
+    extends ChecksumFs(new LocalCheckpointFs.Raw(conf)) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object LocalCheckpointFs {
 

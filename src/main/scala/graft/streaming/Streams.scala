@@ -1173,23 +1173,20 @@ object Streams {
     * admitted three batches ago is REJECTED, which the frozen screen
     * cannot do. Offline maintenance: `Similarity.compactSemdedupIndex`.
     * The read side excludes the batch's own earlier admits. */
-  def semdedupIngestSinkBatch(batch: DataFrame, id: Long,
-      codebook: Seq[(Int, Array[Float])], indexDir: String,
-      outDir: String): Unit =
-    withPersisted(graft.operators.Similarity
-        .semdedupIngestVerdicts(batch, codebook, indexDir, excludeBatch = id)) { v =>
-      writeBatchDir(v.select("vec_id", "n_dup_kept", "is_dup"), outDir, id)
-      writeBatchDir(v.filter(!col("is_dup") && col("nrm") > 0)
-        .select("vec_id", "embedding", "nrm", "cell"), s"$indexDir/admitted", id, "cell")
-    }
-
   def streamSemdedupIngest(df: DataFrame, spark: SparkSession,
       indexDir: String, outDir: String, checkpoint: String)
       : StreamingQuery = {
     graft.models.ModelManifest.validate(spark, indexDir, "semdedup_index")
     graft.functions.VecFunctions.register(spark)
     val codebook = graft.operators.Similarity.codebookFromDir(spark, indexDir)
-    eachBatch(df, checkpoint)(semdedupIngestSinkBatch(_, _, codebook, indexDir, outDir))
+    eachBatch(df, checkpoint) { (batch, id) =>
+      withPersisted(graft.operators.Similarity
+          .semdedupIngestVerdicts(batch, codebook, indexDir, excludeBatch = id)) { v =>
+        writeBatchDir(v.select("vec_id", "n_dup_kept", "is_dup"), outDir, id)
+        writeBatchDir(v.filter(!col("is_dup") && col("nrm") > 0)
+          .select("vec_id", "embedding", "nrm", "cell"), s"$indexDir/admitted", id, "cell")
+      }
+    }
   }
 
   // --------------------------------------------- streaming ANN drift monitor
@@ -1236,17 +1233,24 @@ object Streams {
     * report. No cross-batch state inside the engine (the presence log is
     * the sink's, not the state store's): replay parity with the batch
     * classification is exact. */
-  def diffSinkBatch(batch: DataFrame, id: Long, prev: DataFrame,
-      outDir: String): Unit =
-    withPersisted(batch) { b => // read by the verdict and the presence log
-      writeBatchDir(graft.operators.DataQuality.diffVerdictBatch(b, prev), outDir, id)
-      // presence log: ids only (8 bytes/doc — at 100 TB this is the
-      // id-projection of the snapshot, bucketable by doc_id), the witness
-      // set [[diffCloseSnapshot]] anti-joins at end of snapshot. Duplicate
-      // ids across a replay are harmless (anti-join semantics need
-      // presence, not multiplicity).
-      writeBatchDir(b.select(col("doc_id")), s"$outDir/seen", id)
+  def streamCorpusDiff(df: DataFrame, spark: SparkSession, sfDir: String,
+      outDir: String, checkpoint: String)
+      : (StreamingQuery, DataFrame) = {
+    val prev = graft.operators.DataQuality
+      .prevSnapshot(graft.Tables.documents(spark, sfDir)).persist()
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      withPersisted(batch) { b => // read by the verdict and the presence log
+        writeBatchDir(graft.operators.DataQuality.diffVerdictBatch(b, prev), outDir, id)
+        // presence log: ids only (8 bytes/doc — at 100 TB this is the
+        // id-projection of the snapshot, bucketable by doc_id), the witness
+        // set [[diffCloseSnapshot]] anti-joins at end of snapshot. Duplicate
+        // ids across a replay are harmless (anti-join semantics need
+        // presence, not multiplicity).
+        writeBatchDir(b.select(col("doc_id")), s"$outDir/seen", id)
+      }
     }
+    (q, prev)
+  }
 
   /** End-of-snapshot reconciliation — the `removed` verdict the per-batch
     * classification deliberately cannot emit (a batch witnesses presence,
@@ -1263,14 +1267,6 @@ object Streams {
     prev.join(spark.read.parquet(s"$outDir/seen"), Seq("doc_id"), "left_anti")
       .select(lit("removed").as("status"), col("source"))
       .groupBy("status", "source").agg(count(lit(1)).as("n_docs"))
-
-  def streamCorpusDiff(df: DataFrame, spark: SparkSession, sfDir: String,
-      outDir: String, checkpoint: String)
-      : (StreamingQuery, DataFrame) = {
-    val prev = graft.operators.DataQuality
-      .prevSnapshot(graft.Tables.documents(spark, sfDir)).persist()
-    (eachBatch(df, checkpoint)(diffSinkBatch(_, _, prev, outDir)), prev)
-  }
 
   // --------------------------------------------- streaming media ingest
   /** The per-batch media ingest transform: decode stub + resize geometry
@@ -1345,25 +1341,23 @@ object Streams {
     * join + coalesce makes routing total: every arrived row lands in
     * exactly one route.
     */
-  def decontaminateBatch(batch: DataFrame, id: Long, benchG: DataFrame,
-      outDir: String): Unit = {
-    val counts = graft.operators.Dedup.ngramOverlapCounts(batch, benchG)
-    withPersisted(batch
-        .join(counts, Seq("doc_id"), "left")
-        .select(batch.columns.map(col) :+
-          coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"): _*)) { flagged =>
-      writeBatchDir(flagged.filter(col("n_shared_grams") === 0).drop("n_shared_grams"),
-        s"$outDir/clean", id)
-      writeBatchDir(flagged.filter(col("n_shared_grams") > 0),
-        s"$outDir/contaminated", id)
-    }
-  }
-
   def streamDecontaminate(df: DataFrame, spark: SparkSession, sfDir: String,
       outDir: String, checkpoint: String)
       : (StreamingQuery, DataFrame) = {
     val benchG = graft.operators.Dedup.benchGramHashes(spark, sfDir).persist()
-    (eachBatch(df, checkpoint)(decontaminateBatch(_, _, benchG, outDir)), benchG)
+    val q = eachBatch(df, checkpoint) { (batch, id) =>
+      val counts = graft.operators.Dedup.ngramOverlapCounts(batch, benchG)
+      withPersisted(batch
+          .join(counts, Seq("doc_id"), "left")
+          .select(batch.columns.map(col) :+
+            coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"): _*)) { flagged =>
+        writeBatchDir(flagged.filter(col("n_shared_grams") === 0).drop("n_shared_grams"),
+          s"$outDir/clean", id)
+        writeBatchDir(flagged.filter(col("n_shared_grams") > 0),
+          s"$outDir/contaminated", id)
+      }
+    }
+    (q, benchG)
   }
 
   // ------------------------------------------------ streaming BPE apply
@@ -1402,24 +1396,6 @@ object Streams {
     }
     (q, vocab)
   }
-
-  // ------------------------------------------------ streaming quality gate
-  /** One micro-batch of the streaming quality gate: arriving `(doc_id,
-    * text)` rows are scored with the SAME rule battery the batch
-    * `quality_gopher` query applies (`TextAnalysis.gopherVerdicts` — one
-    * definition of the rules), then routed: `keep` rows to the accepted
-    * corpus, rejected rows to a quarantine that RETAINS the per-rule
-    * verdict columns — the blame a curation operator reads to tune
-    * thresholds (the dead-letter discipline of [[appendWithDeadLetter]],
-    * applied to semantic rejection instead of parse failure). The verdict
-    * frame is persisted so the two routes score each document once, not
-    * twice.
-    */
-  def qualityGateBatch(batch: DataFrame, id: Long, outDir: String): Unit =
-    withPersisted(graft.operators.TextAnalysis.gopherVerdicts(batch)) { v =>
-      writeBatchDir(v.filter(col("keep")).drop("keep"), s"$outDir/accepted", id)
-      writeBatchDir(v.filter(!col("keep")).drop("keep"), s"$outDir/rejected", id)
-    }
 
   // ------------------------------------------- streaming KL drift monitor
   /** Streaming token-distribution drift monitor: each micro-batch of
@@ -1557,36 +1533,46 @@ object Streams {
     (eachBatch(df, checkpoint)(editScreenGrowSinkBatch(_, _, segs, indexDir, outDir)), segs)
   }
 
-  /** Per-micro-batch blocklist routing: clean rows to `clean/`, flagged
-    * rows to `flagged/` (hit counts and bp retained as the blame). The
-    * verdict is `TextAnalysis.blocklistVerdicts` — the exact expression
-    * the batch `blocklist_screen` report aggregates, and total (NULL/empty
-    * text is clean, never dropped), so clean + flagged = arrived on every
-    * batch.
-    */
-  def blocklistScreenBatch(batch: DataFrame, id: Long, outDir: String): Unit =
-    withPersisted(graft.operators.TextAnalysis.blocklistVerdicts(batch)) { v =>
-      writeBatchDir(v.filter(!col("flagged")).drop("flagged"), s"$outDir/clean", id)
-      writeBatchDir(v.filter(col("flagged")).drop("flagged"), s"$outDir/flagged", id)
-    }
-
   /** Streaming blocklist screen over micro-batches of `(doc_id, text)`
     * rows — the ingest-time twin of the batch `blocklist_screen` report.
-    * Per-record scoring, no cross-batch state: replay parity with the
-    * batch verdicts is exact.
+    * Clean rows go to `clean/`, flagged rows to `flagged/` (hit counts and
+    * bp retained as the blame). The verdict is
+    * `TextAnalysis.blocklistVerdicts` — the exact expression the batch
+    * report aggregates, and total (NULL/empty text is clean, never
+    * dropped), so clean + flagged = arrived on every batch. Per-record
+    * scoring, no cross-batch state: replay parity with the batch verdicts
+    * is exact.
     */
   def streamBlocklistScreen(df: DataFrame, outDir: String, checkpoint: String)
       : StreamingQuery =
-    eachBatch(df, checkpoint)(blocklistScreenBatch(_, _, outDir))
+    eachBatch(df, checkpoint) { (batch, id) =>
+      withPersisted(graft.operators.TextAnalysis.blocklistVerdicts(batch)) { v =>
+        writeBatchDir(v.filter(!col("flagged")).drop("flagged"), s"$outDir/clean", id)
+        writeBatchDir(v.filter(col("flagged")).drop("flagged"), s"$outDir/flagged", id)
+      }
+    }
 
   /** Streaming quality gate over micro-batches of `(doc_id, text)` rows —
-    * the ingestion-time twin of the batch `quality_gopher` query. Scoring
-    * is per-record (no cross-batch state), so replay parity with the
-    * batch verdicts is exact.
+    * the ingestion-time twin of the batch `quality_gopher` query. Rows are
+    * scored with the SAME rule battery (`TextAnalysis.gopherVerdicts` —
+    * one definition of the rules), then routed: `keep` rows to the
+    * accepted corpus, rejected rows to a quarantine that RETAINS the
+    * per-rule verdict columns — the blame a curation operator reads to
+    * tune thresholds (the dead-letter discipline of
+    * [[appendWithDeadLetter]], applied to semantic rejection instead of
+    * parse failure). The verdict frame is persisted so the two routes
+    * score each document once, not twice. Scoring is per-record (no
+    * cross-batch state), so replay parity with the batch verdicts is
+    * exact.
     */
   def streamQualityGate(df: DataFrame, outDir: String, checkpoint: String)
       : StreamingQuery =
-    eachBatch(df, checkpoint)(qualityGateBatch(_, _, outDir))
+    eachBatch(df, checkpoint) { (batch, id) =>
+      withPersisted(graft.operators.TextAnalysis.gopherVerdicts(batch)) { v =>
+        writeBatchDir(v.filter(col("keep")).drop("keep"), s"$outDir/accepted", id)
+        writeBatchDir(v.filter(!col("keep")).drop("keep"), s"$outDir/rejected", id)
+      }
+    }
 
   // ------------------------------------------- stream-stream as-of join
   /** Tagged union row for [[streamAsofJoin]]: `side` is "L" (probe) or

@@ -15,6 +15,16 @@ object GraftBridge {
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** The key and direction of `c.asc` or `c.desc` (each direction's
+    * default null ordering: first under asc, last under desc). */
+  def sortKey(c: Column): (Column, catalyst.expressions.SortDirection) = c.node match {
+    case internal.SortOrder(key, internal.SortOrder.Ascending, internal.SortOrder.NullsFirst, _) =>
+      (new Column(key), catalyst.expressions.Ascending)
+    case internal.SortOrder(key, internal.SortOrder.Descending, internal.SortOrder.NullsLast, _) =>
+      (new Column(key), catalyst.expressions.Descending)
+    case _ => throw new IllegalArgumentException(s"expected col.asc or col.desc, got $c")
+  }
+
   /** Wrap a single-row, single-column DataFrame as a scalar-subquery
     * expression — the form `BloomFilterMightContain` (and any other
     * runtime-filter-style probe) requires for its build side: the
@@ -24,14 +34,6 @@ object GraftBridge {
     catalyst.expressions.ScalarSubquery(
       df.queryExecution.analyzed,
       Nil, catalyst.expressions.NamedExpression.newExprId, Nil, None, None, None)
-
-  /** Non-blocking read of an [[Observation]]'s metrics (`getOrEmpty` is
-    * `private[sql]`): empty map until the observed action's listener has
-    * fired. Lets an iterative loop poll a metric that rides an eager
-    * checkpoint's job instead of paying a separate count job per round,
-    * with a bounded wait and an explicit fallback on the caller's side. */
-  def observationGetOrEmpty(o: Observation): Map[String, Any] =
-    o.getOrEmpty
 
   /** Bounded-wait read of one long metric off an [[Observation]] whose
     * action (an eager localCheckpoint, typically) has already run: waits

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Randomized (grp, key, cnt) frames through the string-keyed bounded
-  * top-k ([[graft.functions.CountTopKAggregator]]) against the exact
+  * top-k ([[graft.functions.BoundedTopK]]) against the exact
   * window form `ngram_top_per_source` replaced (r18):
   * `row_number().over(partitionBy(grp).orderBy(cnt desc, key asc)) <= k`,
   * run IN Spark so the tie-break comparison inherits UTF8String's binary
@@ -58,12 +58,9 @@ object CountTopKAggProps extends Properties("CountTopKAgg") {
         val wantSums = df.groupBy("grp").agg(sum("cnt").as("tot"))
           .collect().map(r => (r.getAs[Long]("grp"), r.getAs[Long]("tot")))
           .sorted.toList
-        val tk = udaf(new graft.functions.CountTopKAggregator(k),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.STRING))
+        val tk = graft.functions.BoundedTopK.topK(k, Seq(col("cnt").desc, col("key").asc))
         val agg = df.groupBy("grp")
-          .agg(sum("cnt").as("tot"), tk(col("cnt"), col("key")).as("tk"))
+          .agg(sum("cnt").as("tot"), tk.as("tk"))
         val got = agg
           .select(col("grp"), posexplode(col("tk")).as(Seq("pos", "s")))
           .select(col("grp"), (col("pos") + 1).cast("int").as("rank"),

@@ -136,7 +136,7 @@ class LocalCheckpointFsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a flipped byte in offsets/0 fails a FileContext read with ChecksumException") {
-    val unverified = Seq(Stock, Ours).map { impl =>
+    val oneArgument = Seq(Stock, Ours).map { impl =>
       val dir = tmp("crc")
       Seq("0", ".0.crc").foreach(n => Files.copy(demo2Runs(impl).resolve(s"ckpt/offsets/$n"),
         dir.resolve(n), StandardCopyOption.COPY_ATTRIBUTES))
@@ -149,12 +149,14 @@ class LocalCheckpointFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 1).toByte
       Files.write(dir.resolve("0"), bytes)
       intercept[ChecksumException](read(fc(impl).open(file, 4096)))
-      // the one-argument open, the form Spark's checkpoint manager calls,
-      // goes through FilterFs.open(Path) to the raw filesystem: whether it
-      // verifies must not depend on which of the two is installed
-      scala.util.Try(read(fc(impl).open(file))).toOption.map(_.sameElements(bytes))
+      // the one-argument open, the form Spark's checkpoint manager calls
+      scala.util.Try(read(fc(impl).open(file))).map(_.sameElements(bytes))
     }
-    assert(unverified(1) == unverified(0))
+    // LocalFs hands it through FilterFs.open(Path) to the raw filesystem
+    // and returns the flipped bytes; LocalCheckpointFs verifies it
+    assert(oneArgument(0) == scala.util.Success(true), s"LocalFs: ${oneArgument(0)}")
+    assert(oneArgument(1).failed.toOption.exists(_.isInstanceOf[ChecksumException]),
+      s"LocalCheckpointFs: ${oneArgument(1)}")
   }
 
   test("rename onto an existing file without OVERWRITE throws FileAlreadyExistsException") {

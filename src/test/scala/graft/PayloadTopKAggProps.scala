@@ -7,14 +7,15 @@ import org.apache.spark.sql.functions._
 
 /** Randomized (qid, vec_id, score, payload) frames through the
   * payload-carrying, direction-parameterized bounded top-k
-  * ([[graft.operators.Similarity.topkPayload]] /
-  * [[graft.functions.PayloadTopKAggregator]]) against the exact window
+  * ([[graft.operators.Similarity.topkByQid]] with a carried column /
+  * [[graft.functions.BoundedTopK]]) against the exact window
   * forms it replaced in the serve paths (r18):
   * `row_number().over(partitionBy(qid).orderBy(score asc|desc,
   * vec_id asc)) <= k`. Same discipline as `TopKAggProps`: the comparison
   * runs IN Spark so it inherits nanSafeCompareDoubles (-0.0 == 0.0, NaN
   * greatest — FIRST under desc, LAST under asc); the score pool forces
-  * ties and both double edge cases; rows compare on raw double BITS; the
+  * ties, both double edge cases and NULL (LAST under desc, FIRST under
+  * asc); rows compare on raw double BITS, a NULL apart from 0.0; the
   * payload must arrive attached to exactly the row it entered with
   * (payload = a deterministic function of (qid, vec_id) the checker
   * recomputes). */
@@ -25,10 +26,10 @@ object PayloadTopKAggProps extends Properties("PayloadTopKAgg") {
 
   private lazy val spark = SparkTestSession.spark
 
-  private val scorePool: Seq[Double] = Seq(
-    -1.0, -0.5, -0.1234, -0.0, 0.0, 0.1234, 0.5, 0.9999, 1.0, Double.NaN)
+  private val scorePool: Seq[Option[Double]] = None +: Seq(
+    -1.0, -0.5, -0.1234, -0.0, 0.0, 0.1234, 0.5, 0.9999, 1.0, Double.NaN).map(Some(_))
 
-  private case class Row4(qid: Long, vecId: Long, score: Double, pay: Long)
+  private case class Row4(qid: Long, vecId: Long, score: Option[Double], pay: Long)
 
   private val frameGen: Gen[(Int, Boolean, List[Row4])] = for {
     k <- Gen.chooseNum(1, 6)
@@ -52,14 +53,15 @@ object PayloadTopKAggProps extends Properties("PayloadTopKAgg") {
       val w = Window.partitionBy("qid").orderBy(order, col("vec_id").asc)
       def key(r: org.apache.spark.sql.Row) =
         (r.getAs[Long]("qid"), r.getAs[Int]("rank"), r.getAs[Long]("vec_id"),
-          java.lang.Double.doubleToRawLongBits(r.getAs[Double]("score")),
+          Option(r.getAs[java.lang.Double]("score"))
+            .map(c => java.lang.Double.doubleToRawLongBits(c)),
           r.getAs[Long]("pay"))
       val want = df.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= k)
         .select("qid", "rank", "vec_id", "score", "pay")
         .collect().map(key).sorted.toList
       val got = graft.operators.Similarity
-        .topkPayload(k, asc, "score", "pay")(df)
+        .topkByQid(k, Seq(order, col("vec_id").asc), carried = Seq("pay"))(df)
         .select("qid", "rank", "vec_id", "score", "pay")
         .collect().map(key).sorted.toList
       // the payload really is the row's own: re-derivable from (qid, vec_id)
